@@ -4,9 +4,9 @@ sampled centroids (`similarity.py` keeps the same two-frame contract).
 
 Spark-first iteration shape:
   * centroids live on the DRIVER between iterations (k × dim floats — tiny);
-    each assignment pass embeds them as literals, so assigning is a single
-    NARROW projection (argmin over k squared distances, whole-stage
-    codegen'd) — no crossJoin, no shuffle, no UDF.
+    each assignment pass ships them inside one Arrow-batched pandas UDF,
+    so assigning is a single NARROW projection (numpy argmin over k
+    squared distances) — no crossJoin, no shuffle.
   * the update step is one shuffle per iteration: posexplode the vector and
     average per (cluster, dimension) — shuffle rows = n·dim scalar partials
     with map-side combine, never a collect of member vectors.
@@ -76,8 +76,8 @@ def _spread_small_scan(
 ) -> DataFrame:
     """Repartition a NARROW-but-heavy input to the full pool, only when it
     pays: small-file inputs (one parquet footer under maxPartitionBytes)
-    read as a single partition, which serializes the interpreted k×dim
-    argmin — the expensive term exactly when the corpus or k is large. But
+    read as a single partition, which serializes the k×dim argmin — the
+    expensive term exactly when the corpus or k is large. But
     the rescue is a full shuffle, so below ``_SPREAD_FLOOR_BYTES`` of
     estimated WORK (where one task wins anyway) and above
     ~maxPartitionBytes×parallelism of raw bytes (where the scan is
@@ -103,28 +103,12 @@ def _spread_small_scan(
     return df.repartition(sc.defaultParallelism)
 
 
-# size-aware execution gate for the k<=64 expr strategies (r15, verdict
-# item 3): higher-order-function folds run INTERPRETED (outside
-# whole-stage codegen), so their per-row cost at scale dwarfs the Arrow
-# boundary — measured at factor 300 (tools/arrow_expr_study.py, 600k x
-# 64-dim rows): assign_clusters k=8 expr 35.7 s vs pandas 2.9 s (12x).
-# At gate scale (sf0.1, ~1 MB) the expr path wins (no JVM<->Python
-# boundary, ~0.1 s vs ~0.5 s fixed Arrow cost). The crossover sits near
-# rows x k x dim interpreted-fold time ~= the Arrow fixed cost; the
-# per-entry work multiplier keeps the gate honest for larger models.
-# Both strategies are bit-compatible (parity-pinned), so this gate is
-# execution-only — plans at the oracle SFs are unchanged.
-_EXPR_EXEC_MAX_BYTES = int(
-    __import__("os").environ.get("EDI_EXPR_EXEC_MAX_BYTES", str(8 << 20))
-)
-
-
-def expr_exec_ok(df: DataFrame, work_multiplier: float = 1.0) -> bool:
-    """True when the INTERPRETED expr strategy is the right execution for
-    this input size: estimated bytes x work multiplier at or under
-    ``_EXPR_EXEC_MAX_BYTES`` (8 MiB default, env EDI_EXPR_EXEC_MAX_BYTES).
-    Unknown stats read as huge -> Arrow (the safe side at scale)."""
-    return _plan_size_bytes(df) * max(1.0, work_multiplier) <= _EXPR_EXEC_MAX_BYTES
+def expr_exec_ok(df: DataFrame | None = None, work_multiplier: float = 1.0) -> bool:
+    """Always False: every ANN/clustering kernel has one (Arrow) execution
+    path and nothing in the package calls this. The name is kept because
+    ``perfbench/embed.py`` wraps it in its traced pass to record routing
+    decisions; with no caller it records none."""
+    return False
 
 
 def _sqdist(vec: Column, centroid: list[float]) -> Column:
@@ -156,12 +140,12 @@ def _dlit(x: float) -> str:
 
 
 def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """`_sqdist` as SQL text. Building the centroid literal through the
-    Column DSL costs one py4j round trip PER ELEMENT (64-dim × k centroids
-    × n_iters plan builds measured at multiple seconds of pure driver
-    chatter per kmeans_fit); one parsed expression string is ~100× cheaper
-    and yields the identical Catalyst tree (same zip_with/aggregate fold,
-    same cast discipline — value parity is pinned by test)."""
+    """`_sqdist` as SQL text (`prototype_prune`'s distance CASE). Building
+    the centroid literal through the Column DSL costs one py4j round trip
+    PER ELEMENT (seconds of pure driver chatter at 64-dim × k); one parsed
+    expression string is ~100× cheaper and yields the identical Catalyst
+    tree (same zip_with/aggregate fold, same cast discipline — value
+    parity is pinned by test)."""
     arr = "array(" + ",".join(_dlit(x) for x in centroid) + ")"
     return (
         f"aggregate(zip_with({vec_sql}, {arr}, "
@@ -170,70 +154,12 @@ def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
     )
 
 
-def assign_clusters(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    strategy: str = "auto",
-) -> DataFrame:
-    """df + `cluster` column = argmin squared distance (ties → lowest id).
-
-    ``'expr'`` unrolls one struct per centroid — pure expression, the
-    SQL-mirrorable gate path, but the plan tree grows with k and the
-    folds evaluate interpreted (higher-order functions sit outside
-    whole-stage codegen), so at a FAISS-sized k the per-ITERATION plan
-    build alone dominates `kmeans_fit` (r12 ANN study: k=256 fits
-    crawled). ``'pandas'`` computes the same argmin in numpy over Arrow
-    batches — same tie rule (argmin → first minimum = lowest id), no
-    extra rows, no shuffle. ``'auto'`` (r15): expr at or under 64
-    centroids AND a small input (see ``expr_exec_ok`` — the interpreted
-    fold measured 12× slower than Arrow at factor-300 geometry even at
-    k=8); Arrow otherwise. Bit-compatible either way."""
-    if strategy == "auto":
-        strategy = (
-            "expr"
-            if len(centroids) <= 64
-            and expr_exec_ok(df, work_multiplier=len(centroids) / 8.0)
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
-
-        from pyspark.sql.functions import pandas_udf
-
-        cen_np = np.asarray(centroids, dtype=np.float64)
-
-        @pandas_udf("int")
-        def _assign(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            out = np.empty(x.shape[0], dtype=np.int32)
-            # row-chunked so the (rows x k x dim) broadcast intermediate
-            # stays ~100 MB whatever the Arrow batch size; direct
-            # differences (no norm expansion): immune to the cancellation
-            # that could flip argmin on near-tie centroids
-            step = max(1, 200_000_000 // (cen_np.size * 8 or 1))
-            for lo in range(0, x.shape[0], step):
-                blk = x[lo : lo + step]
-                d2 = ((blk[:, None, :] - cen_np[None, :, :]) ** 2).sum(-1)
-                out[lo : lo + step] = d2.argmin(axis=1)
-            return pd.Series(out)
-
-        return df.withColumn("cluster", _assign(F.col(vec_col)))
-    if strategy != "expr":
-        raise ValueError(f"unknown assign_clusters strategy {strategy!r}")
-    vec_sql = _quote(vec_col)
-    scored = ",".join(
-        f"named_struct('d', {_sqdist_sql(vec_sql, c)}, 'c', {i})"
-        for i, c in enumerate(centroids)
-    )
-    return df.withColumn("cluster", F.expr(f"array_sort(array({scored}))[0].c"))
-
-
 def _np_fold_sqdist(x, cen):
     """(rows, k) squared distances with `_sqdist`'s exact float
     discipline: per-dimension (a−b)·(a−b) accumulated in index order (a
-    sequential left fold), so numpy and expression strategies agree to
-    the last ulp. Intermediate stays (rows × k) — never (rows × k × d)."""
+    sequential left fold), so the numpy kernels agree with the SQL folds
+    (`_sqdist_sql`, the DuckDB oracles' list_sum) to the last ulp.
+    Intermediate stays (rows × k) — never (rows × k × d)."""
     import numpy as np
 
     out = np.zeros((x.shape[0], cen.shape[0]), dtype=np.float64)
@@ -243,12 +169,48 @@ def _np_fold_sqdist(x, cen):
     return out
 
 
+def assign_clusters(
+    df: DataFrame,
+    vec_col: str,
+    centroids: list[list[float]],
+) -> DataFrame:
+    """df + `cluster` column = argmin squared distance (ties → lowest id).
+
+    One Arrow-batched pandas UDF computes the argmin in numpy — no extra
+    rows, no shuffle, and a plan whose size does not grow with k (an
+    unrolled per-centroid SQL expression evaluates its higher-order
+    folds interpreted, outside whole-stage codegen, and its plan build
+    alone dominates `kmeans_fit` at a FAISS-sized k).
+    Distances are direct differences folded in index order
+    (`_np_fold_sqdist`), so they equal the SQL fold to the last ulp;
+    argmin returns the first minimum = the lowest centroid id."""
+    import numpy as np
+
+    from pyspark.sql.functions import pandas_udf
+
+    cen_np = np.asarray(centroids, dtype=np.float64)
+    k = cen_np.shape[0]
+
+    @pandas_udf("int")
+    def _assign(vs: pd.Series) -> pd.Series:
+        x = np.asarray(vs.tolist(), dtype=np.float64)
+        out = np.empty(x.shape[0], dtype=np.int32)
+        # row-chunked so the (rows x k) fold intermediate stays bounded
+        # whatever the Arrow batch size
+        step = max(1, 25_000_000 // max(1, k))
+        for lo in range(0, x.shape[0], step):
+            d2 = _np_fold_sqdist(x[lo : lo + step], cen_np)
+            out[lo : lo + step] = d2.argmin(axis=1)
+        return pd.Series(out)
+
+    return df.withColumn("cluster", _assign(F.col(vec_col)))
+
+
 def assign_clusters_ivf(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
     n_probe: int = 2,
-    strategy: str = "auto",
 ) -> DataFrame:
     """df + `cluster` column via TWO-LEVEL (IVF-style) routing: argmin over
     ~√k coarse centroids first, then argmin over only the fine centroids
@@ -260,9 +222,12 @@ def assign_clusters_ivf(
 
     Construction: coarse centroids = k-means over the FINE CENTROIDS
     themselves, run entirely on the driver (k rows — trivially small);
-    routing compiles to one narrow projection where each probed cell's
-    fine argmin sits in a lazily-evaluated CASE branch (only the matched
-    branches execute per row; no shuffle, no UDF, no join). APPROXIMATE by
+    routing is one Arrow-batched pandas UDF (no shuffle, no join): coarse
+    argsort (stable → ties to the lowest cell), distances to every fine
+    centroid masked to the probed cells' members, argmin (first minimum
+    = lowest fine index), all with `_np_fold_sqdist`'s sequential-fold
+    float discipline (an expression form needs n_probe × k literal
+    scoring nodes and died in driver analysis at k=2400). APPROXIMATE by
     construction: a vector near a cell boundary can route to a different
     (near-equidistant) fine centroid than the flat argmin — raise
     ``n_probe`` to trade compute for agreement.
@@ -273,110 +238,44 @@ def assign_clusters_ivf(
     cells: dict[int, list[int]] = {c: [] for c in range(len(coarse))}
     for i, fc in enumerate(centroids):
         cells[_argmin_driver(fc, coarse)].append(i)
-    # drop EMPTY coarse cells before building the routing expression:
+    # drop EMPTY coarse cells before building the router:
     # stale/duplicate fine centroids can leave a coarse centroid owning
     # nothing, and a probe set landing only on empty cells would otherwise
-    # resolve to the -1 sentinel — silently lumping unrelated vectors into
-    # one dedup block. Every fine centroid belongs to some cell, so at
+    # mask every fine centroid and resolve to index 0 — silently lumping
+    # unrelated vectors into one dedup block. Every fine centroid belongs to some cell, so at
     # least one survives and every probe now yields a real cluster id.
     live = [c for c in range(len(coarse)) if cells[c]]
     coarse = [coarse[c] for c in live]
     cells = {new: cells[old] for new, old in enumerate(live)}
     n_probe = max(1, min(n_probe, len(coarse)))
 
-    if strategy == "auto":
-        # r15: size-aware like assign_clusters — routed per-row work is
-        # O(√k + probe·k/√k) distance folds vs the flat k=8 baseline
-        routed_ops = (k ** 0.5) * (1 + n_probe)
-        strategy = (
-            "expr"
-            if k <= 64 and expr_exec_ok(df, work_multiplier=routed_ops / 8.0)
-            else "pandas"
-        )
-    if strategy == "pandas":
-        # the CASE-routing EXPRESSION is n_probe × k scoring nodes with a
-        # dim-wide literal each: at the r12 factor-300 smoke's k=2400 the
-        # driver died in analysis/codegen (java.lang.OutOfMemoryError: GC
-        # overhead limit exceeded) before a single row moved. The Arrow
-        # path computes the identical routing in numpy: coarse argsort
-        # (stable → ties to the lowest cell), distances to ALL fine
-        # centroids masked to the probed cells' members, argmin (first
-        # minimum = lowest fine index) — same probes, same winners,
-        # sequential-fold float parity via _np_fold_sqdist.
-        import numpy as np
+    import numpy as np
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        live_coarse = np.asarray(coarse, dtype=np.float64)
-        cen_np = np.asarray(centroids, dtype=np.float64)
-        cell_of_fine = np.empty(k, dtype=np.int64)
-        for c, members in cells.items():
-            for i in members:
-                cell_of_fine[i] = c
+    live_coarse = np.asarray(coarse, dtype=np.float64)
+    cen_np = np.asarray(centroids, dtype=np.float64)
+    cell_of_fine = np.empty(k, dtype=np.int64)
+    for c, members in cells.items():
+        for i in members:
+            cell_of_fine[i] = c
 
-        @pandas_udf("int")
-        def _route(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            out = np.empty(x.shape[0], dtype=np.int32)
-            step = max(1, 25_000_000 // max(1, k))
-            for lo in range(0, x.shape[0], step):
-                blk = x[lo : lo + step]
-                d2c = _np_fold_sqdist(blk, live_coarse)
-                probed = np.argsort(d2c, axis=1, kind="stable")[
-                    :, :n_probe
-                ]
-                d2f = _np_fold_sqdist(blk, cen_np)
-                allowed = (
-                    cell_of_fine[None, :, None] == probed[:, None, :]
-                ).any(-1)
-                d2f[~allowed] = np.inf
-                out[lo : lo + step] = d2f.argmin(axis=1)
-            return pd.Series(out)
+    @pandas_udf("int")
+    def _route(vs: pd.Series) -> pd.Series:
+        x = np.asarray(vs.tolist(), dtype=np.float64)
+        out = np.empty(x.shape[0], dtype=np.int32)
+        step = max(1, 25_000_000 // max(1, k))
+        for lo in range(0, x.shape[0], step):
+            blk = x[lo : lo + step]
+            d2c = _np_fold_sqdist(blk, live_coarse)
+            probed = np.argsort(d2c, axis=1, kind="stable")[:, :n_probe]
+            d2f = _np_fold_sqdist(blk, cen_np)
+            allowed = (cell_of_fine[None, :, None] == probed[:, None, :]).any(-1)
+            d2f[~allowed] = np.inf
+            out[lo : lo + step] = d2f.argmin(axis=1)
+        return pd.Series(out)
 
-        return df.withColumn("cluster", _route(F.col(vec_col)))
-    if strategy != "expr":
-        raise ValueError(f"unknown assign_clusters_ivf strategy {strategy!r}")
-
-    # one parsed expression instead of per-element py4j DSL calls — same
-    # tree, same values (see _sqdist_sql); construction cost only
-    vec_sql = _quote(vec_col)
-    coarse_scored = ",".join(
-        f"named_struct('d', {_sqdist_sql(vec_sql, c)}, 'c', {i})"
-        for i, c in enumerate(coarse)
-    )
-    # hoist the coarse ranking into ONE named column instead of inlining
-    # its full text (all coarse-centroid literals) into every CASE branch
-    # — the inlined form grew the SQL text O(n_probe × cells × coarse ×
-    # dim) (r14 advice). Values are unchanged: each probe reads the same
-    # ranked array by name; the helper column is dropped below.
-    ranked = "`__ivf_ranked`"
-
-    def cell_best(cell: int) -> str:
-        members = cells[cell]
-        if not members:  # empty cell: route to a sentinel no real row wins
-            return "named_struct('d', double('Infinity'), 'c', -1)"
-        scored = ",".join(
-            f"named_struct('d', {_sqdist_sql(vec_sql, centroids[i])}, 'c', {i})"
-            for i in members
-        )
-        return f"array_sort(array({scored}))[0]"
-
-    probes = []
-    for j in range(n_probe):
-        cj = f"{ranked}[{j}].c"
-        best = cell_best(0)
-        for cell in range(1, len(coarse)):
-            best = f"CASE WHEN {cj} = {cell} THEN {cell_best(cell)} ELSE {best} END"
-        probes.append(best)
-    return (
-        df.withColumn(
-            "__ivf_ranked", F.expr(f"array_sort(array({coarse_scored}))")
-        )
-        .withColumn(
-            "cluster", F.expr(f"array_sort(array({','.join(probes)}))[0].c")
-        )
-        .drop("__ivf_ranked")
-    )
+    return df.withColumn("cluster", _route(F.col(vec_col)))
 
 
 def _argmin_driver(vec: list[float], centroids: list[list[float]]) -> int:
@@ -445,7 +344,7 @@ def kmeans_fit(
         )
         # the filtered sample inherits the scan's partitioning and AQE
         # happily coalesces it to ~1 partition — which serializes every
-        # Lloyd's pass (the interpreted k×dim argmin is the expensive
+        # Lloyd's pass (the k×dim argmin is the expensive
         # part precisely when fit_fraction is in play, i.e. k is large).
         # One tiny shuffle of the sample rows buys full-pool parallelism;
         # values are unaffected (init is md5-ordered, means are

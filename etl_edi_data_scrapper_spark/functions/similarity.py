@@ -201,19 +201,7 @@ def ivf_index(
                 F.col(c_vec).alias("centroid_vec"),
             )
         )
-    from etl_edi_data_scrapper_spark.functions.clustering import expr_exec_ok
-
-    return centroids, ivf_assign(
-        corpus, centroids, c_id=c_id, c_vec=c_vec,
-        # r15 size-aware gate (see clustering.expr_exec_ok): the known
-        # cell count still skips ivf_assign's LIMIT-bounded probe
-        strategy=(
-            "expr"
-            if n_centroids <= 64
-            and expr_exec_ok(corpus, work_multiplier=n_centroids / 8.0)
-            else "pandas"
-        ),
-    )
+    return centroids, ivf_assign(corpus, centroids, c_id=c_id, c_vec=c_vec)
 
 
 def ivf_assign(
@@ -221,100 +209,63 @@ def ivf_assign(
     centroids: DataFrame,
     c_id: str = "vec_id",
     c_vec: str = "embedding",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (argmax cosine, tie →
     lowest centroid_id). Shared by `ivf_index` (build time) and
     `append_to_ivfpq_index` (incremental adds against FROZEN centroids).
 
-    ``strategy='expr'``: one broadcast cross join + a per-vector windowed
-    argmax — map-side joined, exactly SQL-mirrorable (the gate-oracle
-    path, 16 cells). ``'pandas'``: the production-geometry path — the
-    cross join materializes corpus × n_centroids ROWS through a window
-    shuffle (25.6M rows at 100k × 256; corpus × 65536 at a FAISS-sized
-    cell count is a non-starter), where the Arrow path computes the same
-    argmax-cosine in numpy per batch with ZERO extra rows and NO
-    shuffle. Same tie rule: centroids are ordered by centroid_id and
-    argmax returns the first maximum. ``'auto'``: expr at or under 64
-    cells, pandas above (the cell count probed with a LIMIT-bounded
-    count so resolving the strategy never scans a big frame; callers
-    that know their cell count — `ivf_index`, `append_to_ivfpq_index` —
-    pass the strategy explicitly and skip the probe)."""
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
+    One Arrow-batched pandas UDF computes the argmax-cosine in numpy per
+    batch with ZERO extra rows and NO shuffle (a cross join + window
+    form materializes corpus × n_centroids rows through a shuffle —
+    25.6M rows at 100k × 256). Centroids are ordered by centroid_id and
+    argmax returns the first maximum, so ties go to the lowest id. A
+    zero-norm centroid has no cosine and never wins; a zero-norm vector
+    has no cosine to any centroid and routes to the lowest centroid_id
+    (the SQL oracles' `sim desc nulls last, centroid_id` window rule)."""
+    import numpy as np
 
-        n_cells = centroids.limit(65).count()
-        strategy = (
-            "expr"
-            if n_cells <= 64
-            and expr_exec_ok(corpus, work_multiplier=n_cells / 8.0)
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        from pyspark.sql.functions import pandas_udf
-
-        # centroid ids inherit the corpus id type under literal training
-        # — carry strings as object arrays and emit the matching schema
-        # (the ADC kernels' r13 discipline)
-        cen_kind = _adc_id_kind(centroids, "centroid_id")
-        rows = sorted(
-            centroids.select("centroid_id", "centroid_vec").collect(),
-            key=lambda r: r.centroid_id,
-        )
-        ids_np = np.asarray(
-            [r.centroid_id for r in rows],
-            dtype=np.int64 if cen_kind != "string" else object,
-        )
-        cen_np = np.asarray(
-            [[float(x) for x in r.centroid_vec] for r in rows],
-            dtype=np.float64,
-        )
-        ncen = np.linalg.norm(cen_np, axis=1, keepdims=True)
-        # Zero-norm centroids (e.g. a failed-embed row sampled as a
-        # literal-train centroid) must mirror the expr path, where
-        # dot/(nv*ncen) is null and desc-nulls-last never picks them:
-        # mask their sim column to -inf instead of letting a NaN row in
-        # cen_unit poison argmax (which returns the first NaN index and
-        # silently routes EVERY vector to the degenerate centroid).
-        zero_cen = (ncen == 0.0).ravel()
-        ncen[zero_cen] = 1.0
-        cen_unit = cen_np / ncen
-
-        @pandas_udf(_ADC_ID_SQL[cen_kind])
-        def _route(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            nx = np.linalg.norm(x, axis=1, keepdims=True)
-            zero_vec = (nx == 0.0).ravel()
-            nx[nx == 0.0] = 1.0
-            sims = (x / nx) @ cen_unit.T
-            sims[:, zero_cen] = -np.inf
-            out = ids_np[sims.argmax(axis=1)]
-            # expr parity: a zero-norm vector has null sim everywhere →
-            # the window (sim desc nulls-last, centroid_id asc) picks the
-            # LOWEST centroid_id, including a degenerate one.
-            out[zero_vec] = ids_np[0]
-            return pd.Series(out)
-
-        return corpus.select(
-            F.col(c_id), F.col(c_vec), _route(F.col(c_vec)).alias("centroid_id")
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown ivf_assign strategy {strategy!r}")
-    cb = F.broadcast(centroids)
-    scored = corpus.withColumn("__nv", norm_expr(F.col(c_vec))).crossJoin(
-        cb.withColumn("__ncen", norm_expr(F.col("centroid_vec")))
+    # centroid ids inherit the corpus id type under literal training
+    # — carry strings as object arrays and emit the matching schema
+    # (the ADC kernels' r13 discipline)
+    cen_kind = _adc_id_kind(centroids, "centroid_id")
+    rows = sorted(
+        centroids.select("centroid_id", "centroid_vec").collect(),
+        key=lambda r: r.centroid_id,
     )
-    sim = dot_expr(F.col(c_vec), F.col("centroid_vec")) / (F.col("__nv") * F.col("__ncen"))
-    w = W.partitionBy(c_id).orderBy(F.col("__csim").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("__csim", sim)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select(corpus[c_id], corpus[c_vec], "centroid_id")
+    ids_np = np.asarray(
+        [r.centroid_id for r in rows],
+        dtype=np.int64 if cen_kind != "string" else object,
+    )
+    cen_np = np.asarray(
+        [[float(x) for x in r.centroid_vec] for r in rows],
+        dtype=np.float64,
+    )
+    ncen = np.linalg.norm(cen_np, axis=1, keepdims=True)
+    # Zero-norm centroids (e.g. a failed-embed row sampled as a
+    # literal-train centroid): mask their sim column to -inf instead of
+    # letting a NaN row in cen_unit poison argmax (which returns the
+    # first NaN index and silently routes EVERY vector to the
+    # degenerate centroid).
+    zero_cen = (ncen == 0.0).ravel()
+    ncen[zero_cen] = 1.0
+    cen_unit = cen_np / ncen
+
+    @pandas_udf(_ADC_ID_SQL[cen_kind])
+    def _route(vs: pd.Series) -> pd.Series:
+        x = np.asarray(vs.tolist(), dtype=np.float64)
+        nx = np.linalg.norm(x, axis=1, keepdims=True)
+        zero_vec = (nx == 0.0).ravel()
+        nx[nx == 0.0] = 1.0
+        sims = (x / nx) @ cen_unit.T
+        sims[:, zero_cen] = -np.inf
+        out = ids_np[sims.argmax(axis=1)]
+        out[zero_vec] = ids_np[0]
+        return pd.Series(out)
+
+    return corpus.select(
+        F.col(c_id), F.col(c_vec), _route(F.col(c_vec)).alias("centroid_id")
     )
 
 
@@ -1074,104 +1025,48 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-# auto-switch point for pq_encode/ivf_assign: at or under this many
-# model entries the pure-expression paths stay (zero-Python, exactly
-# SQL-mirrorable — the gate's oracle geometry is 8×16=128 / 16 cells);
-# above it the expression paths choke BOTH ways (r12 study: plan build
-# 2.0 → 14.2 → 42.5 s at 16/256/1024 codes — the nested literal's
-# conversion cost grows linearly — and execution is interpreted because
-# whole-stage codegen does not cover higher-order functions), so the
-# Arrow pandas path takes over with bit-compatible argmin semantics.
-_EXPR_MODEL_MAX_ENTRIES = 512
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame | list,
     c_vec: str = "embedding",
     out_col: str = "codes",
-    strategy: str = "auto",
 ) -> DataFrame:
     """corpus + ``out_col`` array<int>: per subspace, the id of the nearest
-    codebook entry (squared L2; ties → lowest code_id). ZERO shuffle on
-    every strategy — at 100 TB the corpus never moves, and the 8-byte
-    code column is what downstream ADC scans instead of the float
-    vectors.
+    codebook entry (squared L2; ties → lowest code_id). ZERO shuffle — at
+    100 TB the corpus never moves, and the 8-byte code column is what
+    downstream ADC scans instead of the float vectors.
 
-    ``strategy``: 'literal' inlines the collected codebook as ONE
-    nested-array literal + indexed transform (plan tree does not grow
-    with the code budget; pure expression, exactly replicable in SQL —
-    the gate-oracle path). 'pandas' is the production-geometry path
-    (FAISS-standard n_codes=256): an Arrow-batched pandas_udf computing
-    the same argmin in numpy — same tie rule (argmin returns the first
-    minimum = lowest code_id), float64 like the expression's doubles.
-    'auto' picks literal at or under 512 total entries, pandas above
-    (r12 study: at 8×256 the literal costs ~14 s of PLAN BUILD per
-    query plus interpreted per-row evaluation ~100× slower than Arrow
-    batches; at the gate's 8×16 the two paths agree bit-for-bit,
-    parity-tested)."""
-    cbs = _collect_codebooks(codebooks)
-    d_sub = len(cbs[0][0])
-    n_entries = len(cbs) * len(cbs[0])
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
+    One Arrow-batched pandas UDF computes the argmin in numpy (a
+    nested-literal SQL expression costs ~14 s of PLAN BUILD per query at
+    8×256 codes and evaluates its folds interpreted).
+    Distances use `_np_fold_sqdist`'s sequential-fold float discipline,
+    so they equal the SQL oracles' list_sum to the last ulp; argmin
+    returns the first minimum = the lowest code_id."""
+    import numpy as np
 
-        # r15: size-aware (interpreted per-row fold work is n_entries ×
-        # d_sub ops vs the 512-ops/row floor calibration — see
-        # clustering.expr_exec_ok and tools/arrow_expr_study.py)
-        strategy = (
-            "literal"
-            if n_entries <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(
-                corpus, work_multiplier=(n_entries * d_sub) / 512.0
-            )
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
+    from etl_edi_data_scrapper_spark.functions.clustering import (
+        _np_fold_sqdist,
+    )
+    from pyspark.sql.functions import pandas_udf
 
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            _np_fold_sqdist,
-        )
-        from pyspark.sql.functions import pandas_udf
+    cb_np = np.asarray(_collect_codebooks(codebooks), dtype=np.float64)
+    m_sub, n_codes, d_sub = cb_np.shape
 
-        cb_np = np.asarray(cbs, dtype=np.float64)  # (m, n, d_sub)
-        m_sub = cb_np.shape[0]
+    @pandas_udf("array<int>")
+    def _enc(vs: pd.Series) -> pd.Series:
+        x = np.asarray(vs.tolist(), dtype=np.float64)
+        out = np.empty((x.shape[0], m_sub), dtype=np.int32)
+        # row-chunked so the (rows x n_codes) fold intermediate stays
+        # bounded whatever the Arrow batch size
+        step = max(1, 200_000_000 // (n_codes * 8 or 1))
+        for s in range(m_sub):
+            xs = x[:, s * d_sub : (s + 1) * d_sub]
+            for lo in range(0, xs.shape[0], step):
+                d2 = _np_fold_sqdist(xs[lo : lo + step], cb_np[s])
+                out[lo : lo + step, s] = d2.argmin(axis=1)
+        return pd.Series(list(out))
 
-        @pandas_udf("array<int>")
-        def _enc(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            out = np.empty((x.shape[0], m_sub), dtype=np.int32)
-            # row-chunked so the (rows x n_codes) fold intermediate stays
-            # bounded whatever the Arrow batch size
-            step = max(1, 200_000_000 // (cb_np.shape[1] * 8 or 1))
-            for s in range(m_sub):
-                xs = x[:, s * d_sub : (s + 1) * d_sub]
-                # _np_fold_sqdist accumulates (a−b)·(a−b) per dimension in
-                # index order — the literal path's exact fold, so argmin
-                # agrees to the last ulp even on near-tie codes (the ADC
-                # paths already use the same discipline)
-                for lo in range(0, xs.shape[0], step):
-                    d2 = _np_fold_sqdist(xs[lo : lo + step], cb_np[s])
-                    out[lo : lo + step, s] = d2.argmin(axis=1)
-            return pd.Series(list(out))
-
-        return corpus.withColumn(out_col, _enc(F.col(c_vec)))
-    if strategy != "literal":
-        raise ValueError(f"unknown pq_encode strategy {strategy!r}")
-
-    # one nested-array literal + indexed transform (s = subspace index)
-    # instead of m_sub × n_codes per-entry expression nodes: the plan tree
-    # stays tiny, so Catalyst analysis doesn't grow with the code budget
-    # (measured 2-3 s of pure plan-build at m=8/n=16 with unrolled nodes)
-    def per_sub(cb_s: Column, s: Column) -> Column:
-        sub = F.slice(F.col(c_vec), s * d_sub + 1, F.lit(d_sub))
-        dists = F.transform(cb_s, lambda cvec: _sq_dist(sub, cvec))
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    return corpus.withColumn(out_col, F.transform(F.expr(_darr_sql(cbs)), per_sub))
+    return corpus.withColumn(out_col, _enc(F.col(c_vec)))
 
 
 def pq_decode(
@@ -1196,47 +1091,12 @@ def pq_decode(
     )
 
 
-def _adc_tables(
-    queries: DataFrame,
-    cbs: list[list[list[float]]],
-    q_vec: str,
-) -> DataFrame:
-    """queries + ``__tab`` array<array<double>>: __tab[s][c] = squared L2
-    between the query's subvector s and codebook entry c — the ADC lookup
-    table, built map-side per query from the literal codebook."""
-    d_sub = len(cbs[0][0])
-
-    def tab_for(cb_s: Column, s: Column) -> Column:
-        # s is the OUTER transform's index = the subspace id (the inner
-        # per-code lambda stays single-parameter on purpose: a second
-        # parameter there would be the code index, not the subspace)
-        sub = F.slice(F.col(q_vec), s * d_sub + 1, F.lit(d_sub))
-        return F.transform(cb_s, lambda cvec: _sq_dist(sub, cvec))
-
-    return queries.withColumn("__tab", F.transform(F.expr(_darr_sql(cbs)), tab_for))
-
-
-def _adc_expr(m_sub: int, codes_col: str = "codes") -> Column:
-    """Σ_s __tab[s][codes[s]] — sequential in subspace order (the oracle
-    mirrors with list_sum over an ORDER BY sub list, so double addition
-    order is identical on both engines)."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at("__tab", s + 1),
-            F.element_at(F.col(codes_col), s + 1) + 1,
-        ),
-    )
-
-
 def _np_seq_sqdist_tables(q_np, cbs_np):
-    """ADC tables in numpy with the EXACT float discipline of
-    `_adc_tables`: per (subspace, code), a sequential left-fold of squared
-    differences over the sub-dimensions — bit-identical doubles to the
-    expression path (same IEEE ops in the same order), so the Arrow and
-    expression strategies agree to the last ulp, not merely closely."""
+    """ADC lookup tables, (Q, m, n): tab[q, s, c] = squared L2 between
+    query q's subvector s and codebook entry c, as a sequential left-fold
+    of squared differences over the sub-dimensions — the same IEEE ops in
+    the same order as the SQL oracles' list_zip + list_sum, so the
+    doubles agree to the last ulp, not merely closely."""
     import numpy as np
 
     m, n, d = cbs_np.shape
@@ -1250,10 +1110,10 @@ def _np_seq_sqdist_tables(q_np, cbs_np):
 
 
 def _np_route(q_np, cen_np, nprobe):
-    """Query → nprobe nearest coarse cells by cosine, mirroring the
-    expression route bit-for-bit: dots and norms are sequential left
-    folds in index order (`dot_expr`/`norm_expr` discipline), ties break
-    (sim desc, centroid index asc). Returns (Q, nprobe) int indexes into
+    """Query → nprobe nearest coarse cells by cosine, bit-for-bit with the
+    SQL route: dots and norms are sequential left folds in index order
+    (`dot_expr`/`norm_expr` discipline), ties break (sim desc, centroid
+    index asc). Returns (Q, nprobe) int indexes into
     the centroid-id-sorted centroid array."""
     import numpy as np
 
@@ -1279,18 +1139,32 @@ def _np_route(q_np, cen_np, nprobe):
 _ADC_ID_SQL = {"long": "long", "int": "int", "string": "string"}
 
 
+def _collect_queries(queries: DataFrame, q_id: str, q_vec: str, cbs):
+    """(keys, (Q, dim) float64 matrix) of the driver-side query set. An
+    empty set keeps the codebooks' dim, so the table construction and the
+    routing return empty arrays instead of failing on a 1-d array."""
+    import numpy as np
+
+    rows = queries.select(q_id, q_vec).collect()
+    dim = len(cbs) * len(cbs[0][0])
+    q_np = np.asarray(
+        [[float(x) for x in r[1]] for r in rows], dtype=np.float64
+    ).reshape(len(rows), -1 if rows else dim)
+    return [r[0] for r in rows], q_np
+
+
 def _adc_id_kind(df: DataFrame, col: str) -> str:
-    """'long' | 'int' | 'string' for an id column the Arrow ADC kernels
-    can carry; raises a crisp error otherwise — the silent auto-switch
-    above 512 codebook entries must never turn a working expr-path
-    pipeline into a mis-cast (`.simpleString()` names like 'bigint')."""
+    """'long' | 'int' | 'string' for an id column the Arrow kernels
+    (`ivf_assign`, the ADC top-k) can carry; raises a clear error
+    otherwise instead of a numpy mis-cast (`.simpleString()` names like
+    'bigint')."""
     t = df.schema[col].dataType.simpleString()
     kind = {"bigint": "long", "int": "int", "smallint": "int",
             "tinyint": "int", "string": "string"}.get(t)
     if kind is None:
         raise ValueError(
-            f"ADC pandas strategy supports integral or string id columns; "
-            f"{col!r} is {t}. Cast it (or pass strategy='expr')."
+            f"the Arrow ANN kernels support integral or string id columns; "
+            f"{col!r} is {t}. Cast it to bigint or string first."
         )
     return kind
 
@@ -1301,7 +1175,7 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
     """mapInPandas kernel factory: per-PARTITION ADC top-k per query —
     the map-side combine the window-over-everything plan lacks. Each
     batch's codes score via table lookups summed sequentially in
-    subspace order (the `_adc_expr` fold); per query only the k best
+    subspace order; per query only the k best
     (adc asc, id asc) survive across batches, so the shuffle carries
     ≤ partitions × Q × k rows instead of the full scored cross product.
 
@@ -1310,16 +1184,11 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
     tables differ per cell). None = full-scan mode with tab (Q, m, n).
     ``id_kind`` ('long'|'int'|'string', from `_adc_id_kind`) is the
     CORPUS id dtype; string ids ride numpy '<U' arrays so the lexsort
-    tie-break (adc asc, id asc) matches the expr window's ordering."""
+    tie-break (adc asc, id asc) matches the final window's ordering."""
     import numpy as np
     import pandas as _pd
 
     Q = len(q_keys)
-    m = (
-        tab.shape[-2]
-        if tab is not None
-        else next(t.shape[0] for d in probe_cells for t in d.values())
-    )
     int_ids = id_kind != "string"
     id_empty_dtype = np.int64 if int_ids else "<U1"
 
@@ -1343,7 +1212,7 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
             codes = np.asarray(pdf[codes_col].tolist(), dtype=np.int64)
             if probe_cells is None:
                 scores = np.zeros((Q, len(ids)), dtype=np.float64)
-                for s in range(m):
+                for s in range(codes.shape[1]):
                     scores += tab[:, s, codes[:, s]]
                 for qi in range(Q):
                     fold(qi, ids, scores[qi])
@@ -1360,7 +1229,7 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
                         if t is None:
                             continue
                         sc = np.zeros(len(sub_ids), dtype=np.float64)
-                        for s in range(m):
+                        for s in range(sub_codes.shape[1]):
                             sc += t[s, sub_codes[:, s]]
                         fold(qi, sub_ids, sc)
         qcol, icol, scol = [], [], []
@@ -1390,73 +1259,40 @@ def pq_adc_topk(
     q_vec: str = "q_vec",
     c_id: str = "vec_id",
     codes_col: str = "codes",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Approximate top-k by ADC over the full encoded corpus: queries
-    (tiny, broadcast with their lookup tables) × code scan — the corpus
-    side reads 8-byte code arrays and does m_sub table lookups per row
-    instead of a dim-wide float dot product. Ascending distance; ties →
-    lowest corpus id.
+    (tiny, collected to the driver with their lookup tables) × code scan
+    — the corpus side reads 8-byte code arrays and does m_sub table
+    lookups per row instead of a dim-wide float dot product. Ascending
+    distance; ties → lowest corpus id.
 
-    ``strategy='expr'``: crossJoin + windowed top-k, exactly
-    SQL-mirrorable (the gate-oracle path) — but the window shuffles the
-    FULL Q × N scored cross product and the lookup fold evaluates
-    interpreted (62 s for 100 queries × 100k codes in
-    ANN_QUALITY_r12.json). ``'pandas'``: per-partition numpy top-k
-    (map-side combine — the shuffle carries ≤ partitions × Q × k rows)
-    + one tiny global window; tables and lookup sums use the exact
-    sequential-fold float discipline of the expression path, so results
-    are bit-identical, not merely close. ``'auto'``: expr at gate
-    geometry (≤ 512 codebook entries), pandas above."""
+    Per-partition numpy top-k (`mapInPandas`, a map-side combine — the
+    shuffle carries ≤ partitions × Q × k rows) + one tiny global window.
+    A cross join + window form shuffles the FULL Q × N scored product
+    and evaluates its lookup fold interpreted (62 s for 100 queries ×
+    100k codes in ANN_QUALITY_r12.json). Tables and lookup sums are
+    sequential folds (`_np_seq_sqdist_tables`), so the doubles equal
+    the SQL oracles' to the last ulp."""
+    import numpy as np
+
     cbs = _collect_codebooks(codebooks)
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
-
-        # r15: size-aware — the expr path additionally shuffles the FULL
-        # Q × N scored cross product through its window, so a big encoded
-        # frame must route to the Arrow map-side-combine path
-        strategy = (
-            "expr"
-            if len(cbs) * len(cbs[0]) <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(encoded, work_multiplier=float(len(cbs)))
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
-
-        q_kind = _adc_id_kind(queries, q_id)
-        c_kind = _adc_id_kind(encoded, c_id)
-        rows = queries.select(q_id, q_vec).collect()
-        q_keys = [r[0] for r in rows]
-        q_np = np.asarray(
-            [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-        )
-        tab = _np_seq_sqdist_tables(q_np, np.asarray(cbs, dtype=np.float64))
-        kernel = _adc_partition_topk(
-            q_keys, k, c_id, codes_col, tab=tab, id_kind=c_kind
-        )
-        part = encoded.select(F.col(c_id), F.col(codes_col)).mapInPandas(
-            kernel,
-            schema=(
-                f"q_id {_ADC_ID_SQL[q_kind]}, "
-                f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
-            ),
-        ).withColumnRenamed("q_id", q_id)
-        w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
-        return (
-            part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown pq_adc_topk strategy {strategy!r}")
-    qt = F.broadcast(_adc_tables(queries.select(q_id, q_vec), cbs, q_vec))
-    scored = encoded.select(F.col(c_id), F.col(codes_col)).crossJoin(qt)
+    q_kind = _adc_id_kind(queries, q_id)
+    c_kind = _adc_id_kind(encoded, c_id)
+    q_keys, q_np = _collect_queries(queries, q_id, q_vec, cbs)
+    tab = _np_seq_sqdist_tables(q_np, np.asarray(cbs, dtype=np.float64))
+    kernel = _adc_partition_topk(
+        q_keys, k, c_id, codes_col, tab=tab, id_kind=c_kind
+    )
+    part = encoded.select(F.col(c_id), F.col(codes_col)).mapInPandas(
+        kernel,
+        schema=(
+            f"q_id {_ADC_ID_SQL[q_kind]}, "
+            f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
+        ),
+    ).withColumnRenamed("q_id", q_id)
     w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
     return (
-        scored.select(q_id, c_id, _adc_expr(len(cbs), codes_col).alias("adc"))
-        .withColumn("rank", F.row_number().over(w))
+        part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -1473,7 +1309,6 @@ def ivfpq_topk(
     c_id: str = "vec_id",
     codes_col: str = "codes",
     residual: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """IVF routing + ADC scoring (FAISS's IVFADC): route each query to its
     ``nprobe`` nearest coarse centroids (exact float, query side only),
@@ -1489,125 +1324,67 @@ def ivfpq_topk(
     pair is computed against ``q_vec − centroid_vec`` — the canonical
     IVFADC formulation, where the codebooks only have to cover the
     within-cell residual range instead of the whole space, so the same
-    code budget buys a finer quantization grid. Cost shape is identical
-    (the table build was already per routed row).
+    code budget buys a finer quantization grid.
 
-    ``strategy`` as in :func:`pq_adc_topk`: 'expr' is the SQL-mirrorable
-    gate path; 'pandas' (auto above 512 codebook entries) routes in
-    numpy (same fold/tie discipline, bit-identical), prunes the code
-    scan to the probed cells with one `isin` literal filter (static
-    partition pruning on a `save_ivfpq_index` layout), and runs the
-    per-partition Arrow ADC top-k with per-(query, cell) tables — the
-    map-side combine that keeps the shuffle at partitions × Q × k
-    rows."""
+    Routing runs in numpy on the driver (`_np_route`: sequential-fold
+    cosine, ties to the lowest centroid), the code scan is pruned to the
+    probed cells with one `isin` literal filter (static partition
+    pruning on a `save_ivfpq_index` layout), and the per-partition
+    Arrow ADC top-k uses per-(query, cell) tables — the map-side
+    combine that keeps the shuffle at partitions × Q × k rows. Same
+    values and tie rules as :func:`pq_adc_topk`."""
+    import numpy as np
+
     cbs = _collect_codebooks(codebooks)
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
-
-        # r15: size-aware, same rationale as pq_adc_topk (the routed
-        # join still fans each probed cell's codes through the window)
-        strategy = (
-            "expr"
-            if len(cbs) * len(cbs[0]) <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(
-                encoded_assigned, work_multiplier=float(len(cbs))
-            )
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
-
-        q_kind = _adc_id_kind(queries, q_id)
-        c_kind = _adc_id_kind(encoded_assigned, c_id)
-        rows = queries.select(q_id, q_vec).collect()
-        q_keys = [r[0] for r in rows]
-        q_np = np.asarray(
-            [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-        )
-        cen_rows = sorted(
-            centroids.select("centroid_id", "centroid_vec").collect(),
-            key=lambda r: r.centroid_id,
-        )
-        # centroid ids inherit the corpus id type under literal training
-        # (ivf_index train='literal' reuses corpus ids) — keep them as
-        # python values; the kernel matches them against the cell column
-        # generically
-        cen_ids = [r.centroid_id for r in cen_rows]
-        cen_np = np.asarray(
-            [[float(x) for x in r.centroid_vec] for r in cen_rows],
-            dtype=np.float64,
-        )
-        route = _np_route(q_np, cen_np, nprobe)
-        cbs_np = np.asarray(cbs, dtype=np.float64)
-        probe_cells = []
-        raw_tab_cache = None
-        for qi in range(len(q_keys)):
-            if not residual and raw_tab_cache is None:
-                raw_tab_cache = _np_seq_sqdist_tables(q_np, cbs_np)
-            tabs = {}
-            for ci in route[qi]:
-                if residual:
-                    t = _np_seq_sqdist_tables(
-                        (q_np[qi] - cen_np[ci])[None, :], cbs_np
-                    )[0]
-                else:
-                    t = raw_tab_cache[qi]  # raw tables don't vary by cell
-                tabs[cen_ids[ci]] = t
-            probe_cells.append(tabs)
-        probed = sorted({cid for t in probe_cells for cid in t})
-        cand = encoded_assigned.select(
-            F.col(c_id), F.col(codes_col), F.col("centroid_id")
-        ).filter(F.col("centroid_id").isin(probed))
-        kernel = _adc_partition_topk(
-            q_keys, k, c_id, codes_col, probe_cells=probe_cells,
-            id_kind=c_kind,
-        )
-        part = cand.mapInPandas(
-            kernel,
-            schema=(
-                f"q_id {_ADC_ID_SQL[q_kind]}, "
-                f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
-            ),
-        ).withColumnRenamed("q_id", q_id)
-        w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
-        return (
-            part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown ivfpq_topk strategy {strategy!r}")
-    cb = F.broadcast(
-        centroids.withColumn("__ncen", norm_expr(F.col("centroid_vec")))
+    q_kind = _adc_id_kind(queries, q_id)
+    c_kind = _adc_id_kind(encoded_assigned, c_id)
+    q_keys, q_np = _collect_queries(queries, q_id, q_vec, cbs)
+    cen_rows = sorted(
+        centroids.select("centroid_id", "centroid_vec").collect(),
+        key=lambda r: r.centroid_id,
     )
-    qn = queries.select(q_id, q_vec).withColumn("__nq", norm_expr(F.col(q_vec)))
-    qsim = dot_expr(F.col(q_vec), F.col("centroid_vec")) / (
-        F.col("__nq") * F.col("__ncen")
+    # centroid ids inherit the corpus id type under literal training
+    # (ivf_index train='literal' reuses corpus ids) — keep them as
+    # python values; the kernel matches them against the cell column
+    # generically
+    cen_ids = [r.centroid_id for r in cen_rows]
+    cen_np = np.asarray(
+        [[float(x) for x in r.centroid_vec] for r in cen_rows],
+        dtype=np.float64,
     )
-    wq = W.partitionBy(q_id).orderBy(F.col("__qsim").desc(), F.col("centroid_id"))
-    routed = (
-        qn.crossJoin(cb)
-        .withColumn("__qsim", qsim)
-        .withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= nprobe)
-        .select(q_id, q_vec, "centroid_id", "centroid_vec")
-    )
-    if residual:
-        routed = routed.withColumn(
-            "__qres", residual_expr(F.col(q_vec), F.col("centroid_vec"))
-        )
-        routed = _adc_tables(routed, cbs, "__qres").drop(q_vec, "__qres")
-    else:
-        routed = _adc_tables(routed, cbs, q_vec).drop(q_vec)
-    routed = routed.drop("centroid_vec")
+    route = _np_route(q_np, cen_np, nprobe)
+    cbs_np = np.asarray(cbs, dtype=np.float64)
+    # raw tables don't vary by cell: one (Q, m, n) build serves every probe
+    raw_tab = None if residual else _np_seq_sqdist_tables(q_np, cbs_np)
+    probe_cells = []
+    for qi in range(len(q_keys)):
+        tabs = {}
+        for ci in route[qi]:
+            if residual:
+                tabs[cen_ids[ci]] = _np_seq_sqdist_tables(
+                    (q_np[qi] - cen_np[ci])[None, :], cbs_np
+                )[0]
+            else:
+                tabs[cen_ids[ci]] = raw_tab[qi]
+        probe_cells.append(tabs)
+    probed = sorted({cid for t in probe_cells for cid in t})
     cand = encoded_assigned.select(
         F.col(c_id), F.col(codes_col), F.col("centroid_id")
-    ).join(F.broadcast(routed), "centroid_id")
+    ).filter(F.col("centroid_id").isin(probed))
+    kernel = _adc_partition_topk(
+        q_keys, k, c_id, codes_col, probe_cells=probe_cells,
+        id_kind=c_kind,
+    )
+    part = cand.mapInPandas(
+        kernel,
+        schema=(
+            f"q_id {_ADC_ID_SQL[q_kind]}, "
+            f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
+        ),
+    ).withColumnRenamed("q_id", q_id)
     w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
     return (
-        cand.select(q_id, c_id, _adc_expr(len(cbs), codes_col).alias("adc"))
-        .withColumn("rank", F.row_number().over(w))
+        part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 

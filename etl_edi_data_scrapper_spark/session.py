@@ -74,6 +74,12 @@ def get_spark(
         # holds several whole-stage-codegen units); evictions force Janino
         # recompiles of multi-hundred-KB classes on re-run
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # leave the whole-stage codegen stage id out of the generated class
+        # NAME (it stays in `explain` and in a source comment): AQE numbers
+        # stages in creation order, which shifts with stage completion
+        # timing, so with the id in the name every re-run of an identical
+        # pipeline missed the cache above and Janino recompiled it
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         # ParallelGC for the single-JVM local profile: G1 (the JDK 17
         # default) showed random 10-30x whole-query slowdowns on this

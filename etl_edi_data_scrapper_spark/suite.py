@@ -3172,56 +3172,61 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # change: same frames, same values, no caching across invocations.
     from concurrent.futures import ThreadPoolExecutor
 
+    # try/finally: when the main chain raises, shut the pool down too —
+    # cancel_futures drops queued work and the default wait joins the
+    # in-flight DSIR build, so no worker thread outlives this call
     pool = ThreadPoolExecutor(max_workers=1)
-    dsir_fut = pool.submit(
-        dsir_resample,
-        docs.select("doc_id", "text"),
-        docs.filter(F.col("lang") == "fr").select("doc_id", "text"),
-        n_keep=200,
-        n_buckets=256,
-        seed=0,
-    )
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    cq = counts.withColumn(
-        "sqrt_micro", F.floor(F.sqrt("n_docs") * 1000000).cast("long")
-    )
-    # cq (one row per language) feeds the normalizer aggregate AND the
-    # rate table, and rates itself lands in two joins below — without
-    # checkpoints the corpus groupBy re-executes once per reference
-    # (r14 before-plan: 40 parquet scans of `documents`, 110 Exchanges
-    # in one 1,566-line plan). Two lazy checkpoints of dimension-sized
-    # frames collapse that to one scan per distinct pass.
-    cq = cq.localCheckpoint(eager=False)
-    z = cq.agg(F.sum("sqrt_micro").cast("long").alias("z_micro"))
-    rates = (
-        cq.crossJoin(F.broadcast(z))
-        .withColumn(
-            "weight", F.col("sqrt_micro").cast("double") / F.col("z_micro").cast("double")
+    try:
+        dsir_fut = pool.submit(
+            dsir_resample,
+            docs.select("doc_id", "text"),
+            docs.filter(F.col("lang") == "fr").select("doc_id", "text"),
+            n_keep=200,
+            n_buckets=256,
+            seed=0,
         )
-        .withColumn(
-            "rate_pct",
-            # two-step integer division (floor(floor(a/b)/c) == floor(a/(b·c))
-            # for positive longs): z_micro * n_docs as a single product
-            # overflows BIGINT around n_docs ≈ 4e8 — silently under Spark's
-            # non-ANSI wraparound, loudly in DuckDB, diverging either way
-            F.least(
-                F.lit(100).cast("long"),
-                F.expr(f"(({budget} * 100 * sqrt_micro) DIV z_micro) DIV n_docs"),
-            ),
+        counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+        cq = counts.withColumn(
+            "sqrt_micro", F.floor(F.sqrt("n_docs") * 1000000).cast("long")
         )
-    ).localCheckpoint(eager=False)  # reused by the kept filter AND the final join
-    kept = (
-        docs.join(F.broadcast(rates.select("lang", "rate_pct")), "lang")
-        .filter(hex_word(F.md5(F.col("doc_id").cast("string")), 1) % 100 < F.col("rate_pct"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.min("doc_id").alias("lo_kept"),
-            F.max("doc_id").alias("hi_kept"),
+        # cq (one row per language) feeds the normalizer aggregate AND the
+        # rate table, and rates itself lands in two joins below — without
+        # checkpoints the corpus groupBy re-executes once per reference
+        # (r14 before-plan: 40 parquet scans of `documents`, 110 Exchanges
+        # in one 1,566-line plan). Two lazy checkpoints of dimension-sized
+        # frames collapse that to one scan per distinct pass.
+        cq = cq.localCheckpoint(eager=False)
+        z = cq.agg(F.sum("sqrt_micro").cast("long").alias("z_micro"))
+        rates = (
+            cq.crossJoin(F.broadcast(z))
+            .withColumn(
+                "weight", F.col("sqrt_micro").cast("double") / F.col("z_micro").cast("double")
+            )
+            .withColumn(
+                "rate_pct",
+                # two-step integer division (floor(floor(a/b)/c) == floor(a/(b·c))
+                # for positive longs): z_micro * n_docs as a single product
+                # overflows BIGINT around n_docs ≈ 4e8 — silently under Spark's
+                # non-ANSI wraparound, loudly in DuckDB, diverging either way
+                F.least(
+                    F.lit(100).cast("long"),
+                    F.expr(f"(({budget} * 100 * sqrt_micro) DIV z_micro) DIV n_docs"),
+                ),
+            )
+        ).localCheckpoint(eager=False)  # reused by the kept filter AND the final join
+        kept = (
+            docs.join(F.broadcast(rates.select("lang", "rate_pct")), "lang")
+            .filter(hex_word(F.md5(F.col("doc_id").cast("string")), 1) % 100 < F.col("rate_pct"))
+            .groupBy("lang")
+            .agg(
+                F.count(F.lit(1)).alias("n_kept"),
+                F.min("doc_id").alias("lo_kept"),
+                F.max("doc_id").alias("hi_kept"),
+            )
         )
-    )
-    dsir = dsir_fut.result()
-    pool.shutdown(wait=False)
+        dsir = dsir_fut.result()
+    finally:
+        pool.shutdown(cancel_futures=True)
     dsir_by_lang = (
         dsir.filter("dsir_keep")
         .join(docs.select("doc_id", "lang"), "doc_id")
@@ -4975,26 +4980,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "vec_id")
     )
     # fetch the (m_sub × n_codes)-entry codebook ONCE, driver-side;
-    # encode/ADC/IVFADC all inline it as a literal (one bounded job per
-    # plan build — value-identical to collecting pq_codebooks, pinned)
+    # encode/ADC/IVFADC all ship it inside their Arrow kernels (one
+    # bounded job per plan build — value-identical to collecting
+    # pq_codebooks, pinned)
     cbs = sample_codebooks_local(emb, m_sub=8, n_codes=16, dim=64)
-    # r15: resolve the expr/Arrow execution strategy from the RAW corpus
-    # scan (known stats) — the checkpointed `assigned` reads as
-    # unknown-size, which would mis-route the gate-scale bench to Arrow
-    # (clustering.expr_exec_ok treats unknown as huge). Bit-compatible
-    # either way; this only pins WHERE the size is measured.
-    from etl_edi_data_scrapper_spark.functions.clustering import expr_exec_ok
-
-    enc_strategy = (
-        "literal" if expr_exec_ok(emb, work_multiplier=2.0) else "pandas"
-    )
-    adc_strategy = (
-        "expr" if expr_exec_ok(emb, work_multiplier=8.0) else "pandas"
-    )
-    enc = pq_encode(
-        emb.select("vec_id", "embedding"), cbs, strategy=enc_strategy
-    )
-    enc_assigned = pq_encode(assigned, cbs, strategy=enc_strategy)
+    enc = pq_encode(emb.select("vec_id", "embedding"), cbs)
+    enc_assigned = pq_encode(assigned, cbs)
     legs = {
         "lsh_p0": lsh_topk(
             queries, emb, k=5, n_planes=5, multiprobe=False
@@ -5005,12 +4996,9 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf": ivf_topk(queries, centroids, assigned, k=5, nprobe=4).select(
             "q_id", "vec_id"
         ),
-        "pq": pq_adc_topk(
-            queries, cbs, enc, k=5, strategy=adc_strategy
-        ).select("q_id", "vec_id"),
+        "pq": pq_adc_topk(queries, cbs, enc, k=5).select("q_id", "vec_id"),
         "ivfpq": ivfpq_topk(
-            queries, centroids, enc_assigned, cbs, k=5, nprobe=4,
-            strategy=adc_strategy,
+            queries, centroids, enc_assigned, cbs, k=5, nprobe=4
         ).select("q_id", "vec_id"),
     }
     # r15 restructure (verdict item 1): the r14 shape stated each
@@ -5263,8 +5251,8 @@ def _semdedup_oracle(
 @register("kmeans", oracle=_kmeans_oracle())
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over the embeddings table (functions/clustering.py):
-    driver-resident centroids embedded as literals → assignment is a
-    narrow argmin projection; update is one (cluster, dim) shuffle per
+    driver-resident centroids shipped to an Arrow argmin kernel →
+    assignment is a narrow projection; update is one (cluster, dim) shuffle per
     iteration. Fully deterministic (md5-ordered init, exact DECIMAL mean
     updates), so even this iterative algorithm is hash-oracled — the SQL
     side unrolls the three iterations as CTEs. [r7: absorbs a

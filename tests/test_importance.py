@@ -222,3 +222,39 @@ def test_dsir_ratio_table_persistence_and_score_parity(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         load_dsir_ratios(spark, str(tmp_path / "absent"))
+
+
+def test_domain_mixture_pool_threads_do_not_outlive_a_failed_build(
+    spark, sf_dir, monkeypatch
+):
+    """`q_domain_mixture` builds its DSIR leg on a worker thread while the
+    main chain plans the mixture rates. When the main chain raises, the
+    pool must still be shut down and its worker joined: a leaked worker
+    keeps running Spark jobs (and holds an idle thread) after the caller
+    has already seen the error."""
+    import concurrent.futures
+
+    from etl_edi_data_scrapper_spark import suite
+    from etl_edi_data_scrapper_spark.functions import hashing
+
+    pools = []
+
+    class RecordingPool(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            pools.append(self)
+
+    def broken_hex_word(*args, **kwargs):
+        raise RuntimeError("main chain failed")
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", RecordingPool)
+    # the main chain's membership filter is the first hex_word call after
+    # the DSIR leg is submitted; importance.py bound its own reference at
+    # import, so the DSIR leg itself is unaffected
+    monkeypatch.setattr(hashing, "hex_word", broken_hex_word)
+    with pytest.raises(RuntimeError, match="main chain failed"):
+        suite.QUERIES["domain_mixture"](spark, sf_dir)
+    assert len(pools) == 1
+    workers = list(pools[0]._threads)
+    assert workers, "the DSIR leg never reached the pool"
+    assert not any(t.is_alive() for t in workers)

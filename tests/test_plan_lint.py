@@ -7,8 +7,9 @@ free of the two classic 100 TB scale-killers, forever.
   is an accident (e.g. a join condition silently dropped by a refactor).
 * ``BatchEvalPython`` — a row-at-a-time Python UDF in the plan. All
   cleaning/scoring/fingerprinting is built-in Column expressions; Python
-  appears only as Arrow-batched pandas operators (FlatMapGroupsInPandas /
-  FlatMapCoGroupsInPandas / MapInPandas), which render differently.
+  appears only as Arrow-batched pandas operators (ArrowEvalPython /
+  FlatMapGroupsInPandas / FlatMapCoGroupsInPandas / MapInPandas), which
+  render differently; the ANN queries must show theirs.
 
 Compiling all plans also guarantees every query ANALYZES against the
 testdata schema — a column typo or a bad lambda fails here in seconds,
@@ -20,21 +21,34 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 from etl_edi_data_scrapper_spark.suite import QUERIES
 
 
-def test_no_cartesian_products_or_row_python_udfs_anywhere(spark, sf_dir):
+# queries whose final plan carries an ANN kernel, which must render as
+# Arrow-batched Python: ArrowEvalPython for the scalar pandas UDFs
+# (`ivf_assign`), MapInPandas for the ADC top-k
+ARROW_KERNEL_QUERIES = {
+    "ann_topk": "ArrowEvalPython",
+    "ann_recall": "MapInPandas",
+}
+
+
+def test_no_cartesian_products_or_row_python_udfs_anywhere(built_plans):
+    assert set(built_plans) == set(QUERIES)
     offenders: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, df in built_plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         bad = [
             marker
             for marker in ("CartesianProduct", "BatchEvalPython")
             if marker in plan
         ]
+        want = ARROW_KERNEL_QUERIES.get(name)
+        if want and want not in plan:
+            bad.append(f"missing {want}")
         if bad:
             offenders[name] = bad
     assert not offenders, f"scale-killer operators in plans: {offenders}"
 
 
-def test_no_container_columns_in_any_registered_output_schema(spark, sf_dir):
+def test_no_container_columns_in_any_registered_output_schema(built_plans):
     """The driver canonicalizes query output with a pandas `sort_values`
     over ALL columns; array/struct/map cells are unhashable there and the
     whole query ERRORS in CORRECTNESS_r{N}.json (this is exactly how the
@@ -44,10 +58,10 @@ def test_no_container_columns_in_any_registered_output_schema(spark, sf_dir):
     (`array_join`, struct → 'a:b:c' strings) before returning — was only
     a docstring; this pins it mechanically, schema-only, no execution."""
     offenders: dict[str, list[str]] = {}
-    for name, fn in QUERIES.items():
+    for name, df in built_plans.items():
         bad = [
             f"{f.name}: {f.dataType.simpleString()}"
-            for f in fn(spark, sf_dir).schema.fields
+            for f in df.schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         if bad:

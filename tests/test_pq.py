@@ -50,6 +50,97 @@ VECS8 = [
 ]
 
 
+# ---- independent numpy/python oracles for the Arrow kernels ------------
+# Pure-Python float arithmetic in the kernels' documented order: squared
+# distances and dots are sequential left folds in index order, ADC sums
+# add table entries in subspace order, ties go to the lowest id. IEEE
+# doubles make the same ops in the same order bit-identical, so the
+# kernels must match these to the last ulp.
+
+
+def _h(i, d):
+    import hashlib
+
+    return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
+            / 32768.0) - 1.0
+
+
+def _fold_sqdist(a, b):
+    t = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        t += d * d
+    return t
+
+
+def _fold_cosine(a, b):
+    import math
+
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += float(x) * float(y)
+    for x in a:
+        na += float(x) * float(x)
+    for y in b:
+        nb += float(y) * float(y)
+    den = math.sqrt(na) * math.sqrt(nb)
+    return None if den == 0.0 else dot / den
+
+
+def _oracle_encode(vec, cbs):
+    d = len(cbs[0][0])
+    return [
+        min(range(len(cb)), key=lambda c: _fold_sqdist(vec[s * d:(s + 1) * d], cb[c]))
+        for s, cb in enumerate(cbs)
+    ]
+
+
+def _oracle_tables(q, cbs):
+    d = len(cbs[0][0])
+    return [[_fold_sqdist(q[s * d:(s + 1) * d], e) for e in cb]
+            for s, cb in enumerate(cbs)]
+
+
+def _oracle_adc_topk(queries, cbs, codes, k, route=None, residual=False):
+    """queries: [(q_id, q_vec)]; codes: {vec_id: (codes, cell)};
+    route: None (full scan) or (centroid rows [(id, vec)], nprobe) —
+    cosine-ranked (sim desc, centroid id asc), probed cells only.
+    Returns sorted (q_id, rank, vec_id, adc)."""
+    out = []
+    for qid, q in queries:
+        if route is None:
+            tabs = {None: _oracle_tables(q, cbs)}
+        else:
+            cents, nprobe = route
+            ranked = sorted(
+                cents, key=lambda c: (-_fold_cosine(q, c[1]), c[0])
+            )[:nprobe]
+            tabs = {
+                cid: _oracle_tables(
+                    [float(a) - float(b) for a, b in zip(q, cv)] if residual else q,
+                    cbs,
+                )
+                for cid, cv in ranked
+            }
+        scored = []
+        for vid, (cs, cell) in codes.items():
+            t = tabs.get(None if route is None else cell)
+            if t is None:
+                continue
+            adc = 0.0
+            for s, c in enumerate(cs):
+                adc += t[s][c]
+            scored.append((adc, vid))
+        scored.sort()
+        out += [(qid, r, vid, adc) for r, (adc, vid) in enumerate(scored[:k], 1)]
+    return sorted(out)
+
+
+def _vecs(df, id_col, vec_col):
+    return [(r[0], [float(x) for x in r[1]])
+            for r in df.select(id_col, vec_col).collect()]
+
+
 def test_pq_encode_matches_numpy_reference(spark):
     import numpy as np
 
@@ -689,65 +780,52 @@ def test_fit_fraction_sampled_codebooks_ab_vs_full_fit(spark):
     assert cents_df.count() == 16 and enc.count() == 6000
 
 
-def test_pandas_strategies_match_expression_paths(spark):
-    """r12 (ANN study finding): at production geometry the literal/
-    expression model paths choke — plan build grows with the literal
-    (2.0/14.2/42.5 s at 16/256/1024 codes) and higher-order folds
-    evaluate interpreted — so `pq_encode`, `ivf_assign`, and
-    `assign_clusters` gained Arrow/numpy strategies with an auto switch
-    (expr at gate geometry, pandas above). The two strategies must agree
-    EXACTLY: same argmin/argmax, same lowest-id tie rule, float64 both
-    sides, direct-difference distances (no norm expansion) so near-tie
-    rounding can't flip a code."""
-    import hashlib
-
+def test_arrow_kernels_match_numpy_oracle(spark):
+    """`pq_encode`, `ivf_assign` and `assign_clusters` run one Arrow
+    kernel each; an independent pure-Python oracle fixes their values
+    and tie rules: per-subspace code = argmin of the sequential-fold
+    squared distance, cell = argmax cosine, cluster = argmin squared
+    distance, every tie to the lowest id. Duplicate codebook entries and
+    centroids (same vector, higher id) make the tie rule observable."""
     from etl_edi_data_scrapper_spark.functions.clustering import (
         assign_clusters,
     )
     from etl_edi_data_scrapper_spark.functions.similarity import (
+        _collect_codebooks,
         ivf_assign,
-        pq_codebooks,
-        pq_encode,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(400)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(400)]
     corpus = _corpus(spark, vecs)
-    # 75 codes x 4 subspaces = 300 entries: auto resolves to pandas
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=75, dim=8, train="sample")
-    lit = {r.vec_id: list(r.codes) for r in
-           pq_encode(corpus, cbs, strategy="literal").collect()}
-    pnd = {r.vec_id: list(r.codes) for r in
-           pq_encode(corpus, cbs, strategy="pandas").collect()}
-    auto = {r.vec_id: list(r.codes) for r in
-            pq_encode(corpus, cbs).collect()}
-    assert pnd == lit and auto == lit
-
-    from pyspark.sql import functions as F
-
-    centroids = corpus.limit(70).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("centroid_vec"),
+    rows = _vecs(corpus, "vec_id", "embedding")  # float32-rounded values
+    # 75 codes x 4 subspaces; entry 74 duplicates entry 0 in every subspace
+    cbs = _collect_codebooks(
+        pq_codebooks(corpus, m_sub=4, n_codes=75, dim=8, train="sample")
     )
-    expr = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    pnd = {r.vec_id: r.centroid_id for r in
-           ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    auto = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids).collect()}  # 70 cells -> pandas
-    assert pnd == expr and auto == expr
+    cbs = [cb[:74] + [cb[0]] for cb in cbs]
+    got = {r.vec_id: list(r.codes) for r in pq_encode(corpus, cbs).collect()}
+    assert got == {vid: _oracle_encode(v, cbs) for vid, v in rows}
+    assert all(74 not in c for c in got.values())
 
-    cents = [list(map(float, v)) for v in vecs[:70]]
-    e = {r.vec_id: r.cluster for r in
-         assign_clusters(corpus, "embedding", cents, strategy="expr").collect()}
-    pp = {r.vec_id: r.cluster for r in
-          assign_clusters(corpus, "embedding", cents, strategy="pandas").collect()}
-    a = {r.vec_id: r.cluster for r in
-         assign_clusters(corpus, "embedding", cents).collect()}
-    assert pp == e and a == e
+    cents = [(i, v) for i, v in rows[:70]]
+    centroids = spark.createDataFrame(
+        cents, "centroid_id long, centroid_vec array<double>"
+    )
+    got = {r.vec_id: r.centroid_id for r in ivf_assign(corpus, centroids).collect()}
+    want = {
+        vid: min(cents, key=lambda c: (-_fold_cosine(v, c[1]), c[0]))[0]
+        for vid, v in rows
+    }
+    assert got == want
+
+    flat = [v for _, v in rows[:70]] + [rows[5][1]]  # 70 duplicates 5
+    got = {r.vec_id: r.cluster
+           for r in assign_clusters(corpus, "embedding", flat).collect()}
+    want = {
+        vid: min(range(len(flat)), key=lambda c: _fold_sqdist(v, flat[c]))
+        for vid, v in rows
+    }
+    assert got == want and got[5] == 5
 
 
 def test_ann_compact_bounds_files_and_preserves_answers(
@@ -818,134 +896,118 @@ def test_ann_compact_bounds_files_and_preserves_answers(
     assert answers() == pre
 
 
-def test_adc_pandas_strategies_bit_identical_to_expr(spark):
-    """r12 follow-up to the ANN study's flagged cost: `pq_adc_topk` and
-    `ivfpq_topk` gain the same expr/pandas auto-switch as the encode.
-    The Arrow path is BIT-identical, not approximately equal: ADC
-    tables, lookup sums, routing dots/norms are all sequential left
-    folds in index order (the `_adc_expr`/`dot_expr` discipline), ties
-    break (adc asc, id asc) / (sim desc, centroid asc) — asserted on
-    exact (id, rank, adc-to-the-double) tuples, raw AND residual, at a
-    k that forces tie-breaks, including the k-per-partition map-side
-    combine (repartitioned input)."""
-    import hashlib
-
+def test_adc_kernels_bit_identical_to_numpy_oracle(spark):
+    """`pq_adc_topk` and `ivfpq_topk` (raw and residual) against the
+    pure-Python ADC oracle: tables, lookup sums and routing cosines are
+    sequential folds, ties break (adc asc, id asc) / (sim desc, centroid
+    asc) — asserted on exact (id, rank, adc-to-the-double) tuples at a k
+    that forces tie-breaks, through the per-partition map-side combine
+    (repartitioned input)."""
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
+        _collect_codebooks,
         ivfpq_residual_index,
-        ivfpq_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(300)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(300)]
     corpus = _corpus(spark, vecs).repartition(7)
     queries = _queries(spark, [vecs[i] for i in (3, 77, 150)], ids=(3, 77, 150))
-
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample")
-    enc = pq_encode(corpus, cbs, strategy="literal")
+    qs = _vecs(queries, "q_id", "q_vec")
 
     def rows(df):
         return sorted(
             (r.q_id, r.rank, r.vec_id, r.adc) for r in df.collect()
         )
 
-    a = rows(pq_adc_topk(queries, cbs, enc, k=7, strategy="expr"))
-    b = rows(pq_adc_topk(queries, cbs, enc, k=7, strategy="pandas"))
-    assert a == b and len(a) == 21
+    cbs = _collect_codebooks(
+        pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample")
+    )
+    enc = pq_encode(corpus, cbs)
+    codes = {r.vec_id: (list(r.codes), None) for r in enc.collect()}
+    got = rows(pq_adc_topk(queries, cbs, enc, k=7))
+    assert got == _oracle_adc_topk(qs, cbs, codes, 7) and len(got) == 21
 
     centroids, assigned = ivf_index(corpus, n_centroids=6)
-    enc_a = pq_encode(assigned, cbs, strategy="literal").select(
-        "vec_id", "codes", "centroid_id"
-    )
-    e = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3,
-                        strategy="expr"))
-    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3,
-                        strategy="pandas"))
-    assert e == p and len(e) == 21
+    enc_a = pq_encode(assigned, cbs).select("vec_id", "codes", "centroid_id")
+    codes = {r.vec_id: (list(r.codes), r.centroid_id) for r in enc_a.collect()}
+    cents = _vecs(centroids, "centroid_id", "centroid_vec")
+    got = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3))
+    assert got == _oracle_adc_topk(qs, cbs, codes, 7, route=(cents, 3))
+    assert len(got) == 21
+    # an empty query set plans and answers nothing (no 1-d table build)
+    none = queries.limit(0)
+    assert pq_adc_topk(none, cbs, enc, k=7).count() == 0
+    assert ivfpq_topk(none, centroids, enc_a, cbs, k=7, nprobe=3).count() == 0
 
     rcen, renc, rcbs = ivfpq_residual_index(
         corpus, n_centroids=6, m_sub=4, n_codes=8, dim=8
     )
-    e = rows(ivfpq_topk(queries, rcen, renc, rcbs, k=7, nprobe=3,
-                        residual=True, strategy="expr"))
-    p = rows(ivfpq_topk(queries, rcen, renc, rcbs, k=7, nprobe=3,
-                        residual=True, strategy="pandas"))
-    assert e == p and len(e) == 21
+    rcbs = _collect_codebooks(rcbs)
+    codes = {r.vec_id: (list(r.codes), r.centroid_id) for r in renc.collect()}
+    cents = _vecs(rcen, "centroid_id", "centroid_vec")
+    got = rows(ivfpq_topk(queries, rcen, renc, rcbs, k=7, nprobe=3,
+                          residual=True))
+    assert got == _oracle_adc_topk(
+        qs, rcbs, codes, 7, route=(cents, 3), residual=True
+    )
+    assert len(got) == 21
+
 
 def test_ivf_assign_zero_norm_centroid_parity(spark):
     """r13 (ADVICE medium): a zero-norm centroid (e.g. a failed-embed
     row sampled as a literal-train centroid) must never capture the
-    corpus. The expr path gets this for free (null sim sorts last); the
-    pandas path used to divide by a zero centroid norm — the NaN column
-    made np.argmax return the degenerate centroid for EVERY vector. Both
-    strategies must agree exactly, including the double-degenerate case
-    (zero-norm VECTOR too → lowest centroid_id, the expr window's
-    nulls-last + centroid_id-asc outcome)."""
-    import hashlib
-
+    corpus. Its cosine is undefined (SQL: NULL, sorted last), so the
+    kernel masks it instead of letting a NaN column win argmax for EVERY
+    vector. A zero-norm VECTOR has no cosine to any centroid and routes
+    to the lowest centroid_id — degenerate or not — the SQL oracles'
+    `sim desc nulls last, centroid_id` window outcome."""
     from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(100)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(100)]
     vecs[17] = [0.0] * 8  # a zero-norm corpus vector rides along
     corpus = _corpus(spark, vecs)
+    rows = _vecs(corpus, "vec_id", "embedding")
     cent_rows = [(0, [0.0] * 8)] + [  # centroid_id 0 is DEGENERATE
         (i + 1, [float(x) for x in vecs[i * 7]]) for i in range(9)
     ]
+
+    def oracle(cents):
+        out = {}
+        for vid, v in rows:
+            sims = [(_fold_cosine(v, cv), cid) for cid, cv in cents]
+            live = [(-sim, cid) for sim, cid in sims if sim is not None]
+            out[vid] = min(live)[1] if live else min(c for c, _ in cents)
+        return out
+
     centroids = spark.createDataFrame(
         cent_rows, "centroid_id long, centroid_vec array<double>"
     )
-    expr = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    pnd = {r.vec_id: r.centroid_id for r in
-           ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    assert pnd == expr
-    assert 0 not in {c for v, c in expr.items() if v != 17}
-    assert expr[17] == 0  # zero vector: null sims everywhere -> lowest id
+    got = {r.vec_id: r.centroid_id for r in
+           ivf_assign(corpus, centroids).collect()}
+    assert got == oracle(cent_rows)
+    assert 0 not in {c for v, c in got.items() if v != 17}
+    assert got[17] == 0  # zero vector: no cosine anywhere -> lowest id
     # and with no degenerate centroid, the zero VECTOR still agrees
     clean = spark.createDataFrame(
         cent_rows[1:], "centroid_id long, centroid_vec array<double>"
     )
-    e2 = {r.vec_id: r.centroid_id for r in
-          ivf_assign(corpus, clean, strategy="expr").collect()}
-    p2 = {r.vec_id: r.centroid_id for r in
-          ivf_assign(corpus, clean, strategy="pandas").collect()}
-    assert p2 == e2 and e2[17] == 1  # lowest centroid_id present
+    got = {r.vec_id: r.centroid_id for r in ivf_assign(corpus, clean).collect()}
+    assert got == oracle(cent_rows[1:]) and got[17] == 1
 
 
 def test_adc_pandas_strategy_string_ids(spark):
-    """r13 (ADVICE): the expr ADC paths handle any id type, so the
-    silent auto-switch above 512 codebook entries must not crash (or
-    mis-cast) a string-id pipeline. String ids ride the Arrow kernels
-    and tie-break identically to the expr window (adc asc, id asc —
-    lexicographic for strings on both engines); unsupported id types
-    raise a crisp error instead of a numpy cast failure."""
-    import hashlib
-
+    """r13 (ADVICE): string ids ride the Arrow kernels (`pq_adc_topk`,
+    `ivfpq_topk`, `ivf_assign` with literal-trained string centroid
+    ids) and tie-break like the SQL window (adc asc, id asc —
+    lexicographic for strings); unsupported id types raise a clear
+    error instead of a numpy cast failure."""
     import pytest as _pytest
 
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
-        ivfpq_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode,
+        _collect_codebooks,
+        ivf_assign,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(120)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(120)]
     corpus = spark.createDataFrame(
         [(f"doc-{i:04d}", [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id string, embedding array<float>",
@@ -954,41 +1016,68 @@ def test_adc_pandas_strategy_string_ids(spark):
         [(f"q-{i}", [float(x) for x in vecs[i]]) for i in (3, 50)],
         "q_id string, q_vec array<float>",
     )
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample",
-                       c_id="vec_id")
-    enc = pq_encode(corpus, cbs, strategy="literal")
+    qs = _vecs(queries, "q_id", "q_vec")
+    cbs = _collect_codebooks(pq_codebooks(
+        corpus, m_sub=4, n_codes=8, dim=8, train="sample", c_id="vec_id"
+    ))
+    enc = pq_encode(corpus, cbs)
 
     def rows(df):
         return sorted((r.q_id, r.rank, r.vec_id, r.adc) for r in df.collect())
 
-    a = rows(pq_adc_topk(queries, cbs, enc, k=5, strategy="expr"))
-    b = rows(pq_adc_topk(queries, cbs, enc, k=5, strategy="pandas"))
-    assert a == b and len(a) == 10
+    codes = {r.vec_id: (list(r.codes), None) for r in enc.collect()}
+    got = rows(pq_adc_topk(queries, cbs, enc, k=5))
+    assert got == _oracle_adc_topk(qs, cbs, codes, 5) and len(got) == 10
 
     centroids, assigned = ivf_index(corpus, n_centroids=4, c_id="vec_id")
-    enc_a = pq_encode(assigned, cbs, strategy="literal").select(
-        "vec_id", "codes", "centroid_id"
-    )
-    e = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2,
-                        strategy="expr"))
-    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2,
-                        strategy="pandas"))
-    assert e == p and len(e) == 10
+    enc_a = pq_encode(assigned, cbs).select("vec_id", "codes", "centroid_id")
+    codes = {r.vec_id: (list(r.codes), r.centroid_id) for r in enc_a.collect()}
+    cents = _vecs(centroids, "centroid_id", "centroid_vec")
+    got = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2))
+    assert got == _oracle_adc_topk(qs, cbs, codes, 5, route=(cents, 2))
+    assert len(got) == 10
 
-    # ivf_assign's Arrow path carries string centroid ids the same way
-    # (literal training reuses corpus ids, so this is the default shape)
-    from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
-
-    ia_e = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    ia_p = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    assert ia_p == ia_e
+    # ivf_assign carries string centroid ids the same way (literal
+    # training reuses corpus ids, so this is the default shape)
+    got = {r.vec_id: r.centroid_id for r in
+           ivf_assign(corpus, centroids).collect()}
+    want = {vid: min(cents, key=lambda c: (-_fold_cosine(v, c[1]), c[0]))[0]
+            for vid, v in _vecs(corpus, "vec_id", "embedding")}
+    assert got == want
 
     bad = corpus.withColumn("vec_id", F.col("vec_id").cast("binary"))
     with _pytest.raises(ValueError, match="integral or string id"):
-        pq_adc_topk(queries, cbs, pq_encode(bad, cbs, strategy="literal"),
-                    k=5, strategy="pandas")
+        pq_adc_topk(queries, cbs, pq_encode(bad, cbs), k=5)
+
+
+@pytest.mark.parametrize("id_type", ["decimal(10,0)", "double", "date"])
+def test_adc_unsupported_id_type_error_names_the_fix(spark, id_type):
+    """With the Arrow kernels the only path, an id column they cannot
+    carry must fail at plan build with a message that names the column,
+    its type and the cast that fixes it — for the corpus id, the query
+    id and `ivf_assign`'s centroid id alike."""
+    import re
+
+    from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
+
+    corpus = _corpus(spark, VECS8)
+    cbs = pq_codebooks(corpus, m_sub=4, n_codes=3, dim=8)
+    queries = _queries(spark, VECS8[:2])
+    cast = "date_add(DATE'2020-01-01', CAST(vec_id AS INT))" if id_type == "date" \
+        else f"CAST(vec_id AS {id_type})"
+    bad = pq_encode(corpus, cbs).withColumn("vec_id", F.expr(cast))
+    t = bad.schema["vec_id"].dataType.simpleString()
+    msg = re.escape(f"'vec_id' is {t}. Cast it to bigint or string first")
+    with pytest.raises(ValueError, match=msg):
+        pq_adc_topk(queries, cbs, bad, k=2)
+    bad_q = queries.withColumn("q_id", F.expr(cast.replace("vec_id", "q_id")))
+    with pytest.raises(ValueError, match="'q_id' is "):
+        pq_adc_topk(bad_q, cbs, pq_encode(corpus, cbs), k=2)
+    cents = corpus.limit(2).select(
+        F.expr(cast).alias("centroid_id"), F.col("embedding").alias("centroid_vec")
+    )
+    with pytest.raises(ValueError, match="'centroid_id' is "):
+        ivf_assign(corpus, cents)
 
 
 def test_compaction_crash_leaves_recoverable_state(spark, tmp_path):
@@ -1125,7 +1214,7 @@ def test_apply_rotation_plan_is_zero_shuffle(spark, sf_dir):
     R = np.eye(dim).tolist()
     cbs = [[[0.0] * (dim // 8)] * 4 for _ in range(8)]
     plan = (
-        pq_encode(apply_rotation(emb, R), cbs, strategy="pandas")
+        pq_encode(apply_rotation(emb, R), cbs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
@@ -1607,45 +1696,37 @@ def test_cli_ann_index_n_centroids_auto(spark, sf_dir, tmp_path, capsys):
     assert spark.read.parquet(out).count() == 500 * 2
 
 
-def test_expr_exec_size_gate_routes_auto_strategies(spark, tmp_path):
-    """r15: the auto strategies are size-aware (tools/arrow_expr_study.py:
-    the interpreted fold measured 12-13x slower than Arrow at factor-300
-    geometry) — small inputs keep the zero-Python expr path, big ones
-    route to the bit-compatible Arrow path. A frame with UNKNOWN stats
-    (e.g. a local/Arrow-built relation) must read as huge → Arrow, the
-    safe side at scale."""
-    from etl_edi_data_scrapper_spark.functions import clustering
+def test_ann_kernels_plan_as_arrow_at_any_size(spark, tmp_path):
+    """The six ANN/clustering kernels have ONE execution path: an
+    Arrow-batched Python operator whatever the input size — a tiny
+    parquet scan (known, small stats) plans the same operators as a
+    frame with unknown stats. Never a row-at-a-time BatchEvalPython
+    UDF, never a cross join."""
     from etl_edi_data_scrapper_spark.functions.clustering import (
         assign_clusters,
-        expr_exec_ok,
+        assign_clusters_ivf,
     )
+    from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
 
-    local = spark.createDataFrame(
-        [(i, [float(i), float(i % 3)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "gate_corpus.parquet")
-    local.write.parquet(path)
-    corpus = spark.read.parquet(path)  # scan stats = file bytes (tiny)
-    cents = [[0.0, 0.0], [10.0, 1.0]]
-    assert expr_exec_ok(corpus)
-    assert not expr_exec_ok(corpus, work_multiplier=1e12)
-
-    def has_python_eval(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
-
-    small_auto = assign_clusters(corpus, "embedding", cents, strategy="auto")
-    assert not has_python_eval(small_auto)  # small input -> expr
-
-    old = clustering._EXPR_EXEC_MAX_BYTES
-    clustering._EXPR_EXEC_MAX_BYTES = 0  # force the "big input" branch
-    try:
-        big_auto = assign_clusters(corpus, "embedding", cents, strategy="auto")
-        assert has_python_eval(big_auto)  # big input -> Arrow
-        # bit-compatible: same assignments either way
-        a = {(r.vec_id, r.cluster) for r in small_auto.collect()}
-        b = {(r.vec_id, r.cluster) for r in big_auto.collect()}
-        assert a == b
-    finally:
-        clustering._EXPR_EXEC_MAX_BYTES = old
+    path = str(tmp_path / "tiny.parquet")
+    _corpus(spark, VECS8).write.parquet(path)
+    for corpus in (spark.read.parquet(path), _corpus(spark, VECS8)):
+        cbs = pq_codebooks(corpus, m_sub=4, n_codes=3, dim=8)
+        queries = _queries(spark, VECS8[:2])
+        centroids, assigned = ivf_index(corpus, n_centroids=2)
+        enc_a = pq_encode(assigned, cbs)
+        cents = [[float(x) for x in v] for v in VECS8[:4]]
+        plans = {
+            "assign_clusters": assign_clusters(corpus, "embedding", cents),
+            "assign_clusters_ivf": assign_clusters_ivf(corpus, "embedding", cents),
+            "ivf_assign": ivf_assign(corpus, centroids),
+            "pq_encode": pq_encode(corpus, cbs),
+            "pq_adc_topk": pq_adc_topk(queries, cbs, pq_encode(corpus, cbs)),
+            "ivfpq_topk": ivfpq_topk(queries, centroids, enc_a, cbs, nprobe=2),
+        }
+        for name, df in plans.items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            marker = "MapInPandas" if "topk" in name else "ArrowEvalPython"
+            assert marker in plan, (name, plan)
+            for bad in ("BatchEvalPython", "CartesianProduct", "NestedLoopJoin"):
+                assert bad not in plan, (name, bad)

@@ -108,17 +108,21 @@ def test_boundary_window_sees_only_boundary_rows(spark):
     assert {r.vec_id for r in got if r.proto_keep} == _spec_keep(rows, 0.5, True)
 
 
-def test_assign_clusters_ivf_pandas_matches_expr(spark):
-    """r12: the factor-300 smoke OOM'd the driver building the k=2400
-    CASE-routing expression (n_probe x k literal scoring nodes), so
-    `assign_clusters_ivf` gained the strategy switch: expr at k<=64
-    (gate-exact), Arrow/numpy above. Identical routing — same coarse
-    probe sets (stable argsort = lowest-cell ties), same fine winners
-    (lowest-index ties), sequential-fold float parity — asserted exact
-    on 90 fine centroids x 400 vectors at n_probe 1..3."""
+def test_assign_clusters_ivf_matches_numpy_oracle(spark):
+    """`assign_clusters_ivf` routes through one Arrow kernel (an
+    expression form of the k=2400 CASE routing OOM'd the factor-300
+    driver in analysis). A pure-Python oracle fixes its values and tie
+    rules: the coarse quantizer (driver k-means over the fine centroids,
+    empty cells dropped), probe cells = the n_probe nearest coarse
+    centroids (stable → ties to the lowest cell), winner = the nearest
+    fine centroid inside the probed cells (ties to the lowest index),
+    all squared distances sequential folds — asserted exact on 90 fine
+    centroids x 400 vectors at n_probe 1..3."""
     import hashlib
 
     from etl_edi_data_scrapper_spark.functions.clustering import (
+        _argmin_driver,
+        _kmeans_driver,
         assign_clusters_ivf,
     )
 
@@ -126,31 +130,44 @@ def test_assign_clusters_ivf_pandas_matches_expr(spark):
         return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
                 / 32768.0) - 1.0
 
+    def fold(a, b):
+        t = 0.0
+        for x, y in zip(a, b):
+            t += (float(x) - float(y)) * (float(x) - float(y))
+        return t
+
     vecs = [[10.0 * h(i, d) for d in range(6)] for i in range(400)]
     cents = [[10.0 * h(1000 + i, d) for d in range(6)] for i in range(90)]
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
+    rows = [(r.vec_id, list(r.embedding)) for r in df.collect()]
+    coarse = _kmeans_driver(cents, round(len(cents) ** 0.5))
+    owner = [_argmin_driver(c, coarse) for c in cents]
+    live = sorted(set(owner))
     for n_probe in (1, 2, 3):
-        e = {r.vec_id: r.cluster for r in assign_clusters_ivf(
-            df, "embedding", cents, n_probe=n_probe, strategy="expr"
-        ).collect()}
-        p = {r.vec_id: r.cluster for r in assign_clusters_ivf(
-            df, "embedding", cents, n_probe=n_probe, strategy="pandas"
-        ).collect()}
-        a = {r.vec_id: r.cluster for r in assign_clusters_ivf(
+        want = {}
+        for vid, v in rows:
+            near = sorted(live, key=lambda c: (fold(v, coarse[c]), live.index(c)))
+            probed = set(near[:n_probe])
+            want[vid] = min(
+                (i for i in range(len(cents)) if owner[i] in probed),
+                key=lambda i: (fold(v, cents[i]), i),
+            )
+        got = {r.vec_id: r.cluster for r in assign_clusters_ivf(
             df, "embedding", cents, n_probe=n_probe
-        ).collect()}  # 90 > 64 -> auto resolves to pandas
-        assert p == e and a == e
+        ).collect()}
+        assert got == want
 
 
 def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
-    """r14 optimization: assign_clusters/prototype_prune build their
-    centroid-distance expressions as ONE parsed SQL string (construction
-    was one py4j round trip per centroid element — seconds of driver
-    chatter per kmeans_fit). The parsed tree must equal the Column-DSL
-    fold (`_sqdist`) to the last ulp, argmin tie rule included."""
+    """r14 optimization: prototype_prune builds its centroid-distance
+    expression as ONE parsed SQL string (construction was one py4j round
+    trip per centroid element). The parsed tree must equal the
+    Column-DSL fold (`_sqdist`) to the last ulp, and the Arrow
+    `assign_clusters` argmin must equal the DSL-built argmin, tie rule
+    included."""
     import hashlib
 
     from etl_edi_data_scrapper_spark.functions.clustering import (
@@ -179,14 +196,14 @@ def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
         for i in range(len(cents)):
             assert r[f"o{i}"] == r[f"n{i}"]
 
-    # the shipped argmin column vs a DSL-built reference argmin
+    # the Arrow argmin column vs a DSL-built reference argmin
     ref = F.array_sort(
         F.array(*[
             F.struct(_sqdist(F.col("embedding"), c).alias("d"), F.lit(i).alias("c"))
             for i, c in enumerate(cents)
         ])
     )[0]["c"]
-    got = assign_clusters(df, "embedding", cents, strategy="expr")
+    got = assign_clusters(df, "embedding", cents)
     mism = got.withColumn("ref", ref).filter("cluster <> ref").count()
     assert mism == 0
 

@@ -5,9 +5,8 @@ The gate runs the PQ/IVFADC family at toy geometry (m_sub=8, n_codes=16,
 operating point. This study measures, at FAISS-standard geometry
 (n_codes=256, 100k vectors, dim 64, n_centroids=256):
 
-  (a) the literal-codebook encode's PLAN-BUILD cost as n_codes grows
-      (the r11 claim was "constant", asserted from the nested-literal
-      design, never measured past 16 codes);
+  (a) the encode's PLAN-BUILD cost as n_codes grows (the Arrow kernel
+      carries the codebook in its closure, so it should stay constant);
   (b) recall@10 vs the EXACT (numpy, independent) squared-L2 answer for
       the three tiers — full-scan ADC, routed IVFADC over nprobe, and
       the k_factor exact-rerank ladder;
@@ -19,9 +18,8 @@ operating point. This study measures, at FAISS-standard geometry
       finding: 8 raw bytes plateau at 0.19 recall@10 at σ-noise
       hardness regardless of nprobe).
 
-All tiers run strategy='auto' (the production path at this geometry —
-Arrow kernels; r12's adc_full_scan row predates the switch and is
-superseded by this artifact). r14: the OPQ rows are measured with the
+All tiers run the Arrow kernels (the only execution path; r12's
+adc_full_scan row predates them and is superseded by this artifact). r14: the OPQ rows are measured with the
 SELF-CONSISTENT opq_train (final-rotation codebook refit — the r13
 ADVICE finding that this ladder was encoding final-R vectors against
 stale-R codebooks is fixed, so r14 OPQ recalls supersede r13's), and
@@ -154,35 +152,27 @@ def main() -> int:
     ).cache()
     queries.count()
 
-    # ---- (a) plan-build cost of the literal encode vs n_codes ---------
+    # ---- (a) plan-build cost of the encode vs n_codes -----------------
     # values don't matter for plan build; synthetic codebooks isolate the
-    # Catalyst analysis/optimization cost of the nested-array literal
+    # Catalyst analysis and optimization cost
     d_sub = args.dim // args.m_sub
-    plan_build = {"literal": {}, "auto": {}}
-    for strat in () if args.skip_plan_build else ("literal", "auto"):
-        for nc in (16, 256, 1024):
-            fake = [[[float(s + c) for _ in range(d_sub)] for c in range(nc)]
-                    for s in range(args.m_sub)]
-            t0 = time.time()
-            enc = pq_encode(corpus, fake, strategy=strat)
-            enc.explain(mode="cost")  # forces analysis + optimization
-            plan_build[strat][str(nc)] = round(time.time() - t0, 2)
+    plan_build = {}
+    for nc in () if args.skip_plan_build else (16, 256, 1024):
+        fake = [[[float(s + c) for _ in range(d_sub)] for c in range(nc)]
+                for s in range(args.m_sub)]
+        t0 = time.time()
+        pq_encode(corpus, fake).explain(mode="cost")  # analysis + optimization
+        plan_build[str(nc)] = round(time.time() - t0, 2)
     result["encode_plan_build_sec_by_n_codes"] = plan_build
     log(f"plan build: {plan_build}")
 
-    # EXECUTION timing at full geometry, both strategies: the end-to-end
-    # cost a builder actually pays (literal = interpreted HOF fold,
-    # pandas = Arrow/numpy batches)
+    # EXECUTION timing at full geometry: the end-to-end encode cost
     fake256 = [[[float(s + c) for _ in range(d_sub)] for c in range(args.n_codes)]
                for s in range(args.m_sub)]
-    result["encode_execute_sec"] = {}
-    for strat in ("literal", "auto"):
-        t0 = time.time()
-        pq_encode(corpus, fake256, strategy=strat).select(
-            F.sum(F.element_at("codes", 1))
-        ).collect()
-        result["encode_execute_sec"][strat] = round(time.time() - t0, 1)
-        log(f"encode execute [{strat}]: {result['encode_execute_sec'][strat]} s")
+    t0 = time.time()
+    pq_encode(corpus, fake256).select(F.sum(F.element_at("codes", 1))).collect()
+    result["encode_execute_sec"] = round(time.time() - t0, 1)
+    log(f"encode execute: {result['encode_execute_sec']} s")
 
     # ---- build the two real indexes (timed) ---------------------------
     log("training raw PQ codebooks (kmeans, sampled) ...")
