@@ -448,13 +448,6 @@ def jaccard_pairs(
 # --- SimHash -----------------------------------------------------------------
 
 
-def _hex_val(c: Column) -> Column:
-    """hex char → 0..15 via instr arithmetic (portable to any SQL engine)."""
-    from etl_edi_data_scrapper_spark.functions.hashing import hex_val
-
-    return hex_val(c)
-
-
 def simhash_bit_sums(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
 ) -> DataFrame:

@@ -18,7 +18,9 @@ Spark-first restatement:
     still moves only one partial row per key per task. ``max_by(col, _seq)``
     = last-write-wins; ``min``/``max`` direct; ``addArray`` =
     ``array_sort(collect_list(struct(_seq, col)))`` then field-extract
-    (exact arrival order, deterministic under any partitioning).
+    (exact arrival order, deterministic under any partitioning). For keys
+    hot enough to straggle one reducer, ``salt_buckets > 1`` builds the
+    two-stage (key, salt) → key plan from the same per-rule table.
   * enrichment legs are typically small (supplier dimension feeds) →
     broadcast-joinable; AQE promotes them at runtime, or pass
     ``broadcast=True`` to force.
@@ -31,10 +33,26 @@ from pyspark.sql import functions as F
 
 SEQ_COL = "_seq"
 
-# min/max/addArray + default last-write-wins are the reference's rules
-# (`DataSetCollection::applyRules`); sum/first/count are natural
-# generalizations this engine adds (all still one-shuffle aggregates).
-VALID_RULES = {"min", "max", "addArray", "sum", "first", "count"}
+# One row per merge rule: (partial, combine). ``partial(v, seq)``
+# aggregates the rows; ``combine(v, lo, hi)`` merges per-salt partials when
+# ``salt_buckets > 1``, with ``lo``/``hi`` the per-salt min/max seq. The
+# ``None`` row is the default last-write-wins. min/max/addArray + that
+# default are the reference's rules (`DataSetCollection::applyRules`);
+# sum/first/count are natural generalizations this engine adds. ``addArray``
+# collects (seq, value) pairs; ``keyed_merge`` finishes them into values.
+_AGG = {
+    "min": (lambda v, s: F.min(v), lambda v, lo, hi: F.min(v)),
+    "max": (lambda v, s: F.max(v), lambda v, lo, hi: F.max(v)),
+    "sum": (lambda v, s: F.sum(v), lambda v, lo, hi: F.sum(v)),
+    "count": (lambda v, s: F.count(v), lambda v, lo, hi: F.sum(v)),
+    "first": (lambda v, s: F.min_by(v, s), lambda v, lo, hi: F.min_by(v, lo)),
+    "addArray": (
+        lambda v, s: F.collect_list(F.struct(s.alias("s"), v.alias("v"))),
+        lambda v, lo, hi: F.flatten(F.collect_list(v)),
+    ),
+    None: (lambda v, s: F.max_by(v, s), lambda v, lo, hi: F.max_by(v, hi)),
+}
+VALID_RULES = set(_AGG) - {None}
 
 
 # Legs live at bit 59+: monotonically_increasing_id is partition_id<<33 |
@@ -80,6 +98,33 @@ def with_seq(df: DataFrame, leg: int = 0, seq_expr: Column | None = None) -> Dat
     return df.withColumn(SEQ_COL, seq + F.lit(int(leg) << _LEG_SHIFT))
 
 
+def _fresh(taken: set[str], name: str) -> str:
+    """``name``, prefixed with ``_`` until no column in ``taken`` has it.
+
+    ``taken`` holds lower-cased names (Spark resolves column names
+    case-insensitively); the chosen name is added to it, so successive
+    helpers never collide with each other or with a user column.
+    """
+    while name.lower() in taken:
+        name = "_" + name
+    taken.add(name.lower())
+    return name
+
+
+def _validated(merge_rules: dict[str, str] | None) -> dict[str, str]:
+    merge_rules = dict(merge_rules or {})
+    bad = set(merge_rules.values()) - VALID_RULES
+    if bad:
+        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    return merge_rules
+
+
+def _keyed_rows(df: DataFrame, key: str) -> DataFrame:
+    """Drop NULL / ``''`` keys (`DataSetCollection.php:70-71`)."""
+    kc = F.col(key)
+    return df.filter(kc.isNotNull() & (kc.cast("string") != ""))
+
+
 def keyed_merge(
     df: DataFrame,
     key: str,
@@ -87,6 +132,7 @@ def keyed_merge(
     seq_col: str = SEQ_COL,
     drop_seq: bool = True,
     max_array_elements: int | None = None,
+    salt_buckets: int = 1,
 ) -> DataFrame:
     """Group by ``key`` applying per-column merge rules (§2.4 of SURVEY.md).
 
@@ -98,48 +144,53 @@ def keyed_merge(
     unbounded per-key array is the one growth term the merge otherwise has
     (SCALE.md §keyed_merge). The aggregation state itself still collects
     before slicing; for keys hot enough that even that is a problem,
-    ``keyed_merge_salted`` splits the collection across salt buckets.
-    """
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    ``salt_buckets > 1`` splits the collection across salt buckets.
 
+    ``salt_buckets == 1`` is one ``groupBy(key)``. ``salt_buckets > 1`` is
+    the skew-proof two-stage plan: a hot key (one UPC = 10% of a 100 TB
+    feed) funnels into a single reducer under plain groupBy, so each key is
+    split into (key, seq mod n) sub-groups combined in parallel, then the
+    per-salt partials merge per key (``_AGG``'s combine column). Results
+    are IDENTICAL to the one-stage plan (given unique ``seq_col``). AQE's
+    skew-join splitting handles the JOIN side of skew; this handles the
+    AGGREGATION side, which AQE does not re-split.
+    """
+    merge_rules = _validated(merge_rules)
     if seq_col not in df.columns:
         df = with_seq(df)
         seq_col = SEQ_COL
+    df = _keyed_rows(df, key)
 
-    kc = F.col(key)
-    df = df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-
-    aggs: list[Column] = []
-    for c in df.columns:
-        if c == key or c == seq_col:
-            continue
-        rule = merge_rules.get(c)
-        if rule == "min":
-            aggs.append(F.min(c).alias(c))
-        elif rule == "max":
-            aggs.append(F.max(c).alias(c))
-        elif rule == "sum":
-            aggs.append(F.sum(c).alias(c))
-        elif rule == "count":
-            aggs.append(F.count(c).alias(c))
-        elif rule == "first":
-            aggs.append(F.min_by(c, F.col(seq_col)).alias(c))
-        elif rule == "addArray":
-            # exact arrival order: sort the (seq, value) pairs, then project
-            pairs = F.array_sort(
-                F.collect_list(F.struct(F.col(seq_col).alias("s"), F.col(c).alias("v")))
-            )
+    rules = [(c, merge_rules.get(c)) for c in df.columns if c not in (key, seq_col)]
+    if not drop_seq:
+        rules.append((seq_col, "max"))
+    seq = F.col(seq_col)
+    if salt_buckets > 1:
+        taken = {c.lower() for c in df.columns}
+        salt, hi, lo = (_fresh(taken, n) for n in ("__salt", "__max_seq", "__min_seq"))
+        staged = (
+            df.withColumn(salt, F.pmod(seq, F.lit(int(salt_buckets))))
+            .groupBy(key, salt)
+            .agg(*[_AGG[r][0](F.col(c), seq).alias(c) for c, r in rules],
+                 F.max(seq).alias(hi), F.min(seq).alias(lo))
+        )
+        merged = staged.groupBy(key).agg(
+            *[_AGG[r][1](F.col(c), F.col(lo), F.col(hi)).alias(c) for c, r in rules]
+        )
+    else:
+        merged = df.groupBy(key).agg(*[_AGG[r][0](F.col(c), seq).alias(c) for c, r in rules])
+    # finish (addArray only): pairs in arrival order, first N, values only;
+    # Catalyst folds this projection into the final aggregate
+    out = [key]
+    for c, r in rules:
+        if r == "addArray":
+            pairs = F.array_sort(F.col(c))
             if max_array_elements is not None:
                 pairs = F.slice(pairs, 1, int(max_array_elements))
-            aggs.append(F.transform(pairs, lambda x: x["v"]).alias(c))
+            out.append(F.transform(pairs, lambda x: x["v"]).alias(c))
         else:
-            aggs.append(F.max_by(c, F.col(seq_col)).alias(c))
-    if not drop_seq:
-        aggs.append(F.max(seq_col).alias(seq_col))
-    return df.groupBy(key).agg(*aggs)
+            out.append(c)
+    return merged.select(*out)
 
 
 def enrich(
@@ -163,104 +214,31 @@ def enrich(
     marker (leg key is never null: keyed_merge drops those rows), not off
     value presence.
     """
+    taken = {c.lower() for c in (*base.columns, *fields, seq_col)}
+    lk = _fresh(taken, "__leg_key")
+    lf = {f: _fresh(taken, f"__leg_{f}") for f in fields}
     leg_proj = leg.select(
-        F.col(leg_key).alias("__leg_key"),
+        F.col(leg_key).alias(lk),
         *[F.col(f) for f in fields],
         *([F.col(seq_col)] if seq_col in leg.columns else []),
     )
-    leg_last = keyed_merge(leg_proj, "__leg_key", {}, seq_col=seq_col)
-    renamed = leg_last.select(
-        "__leg_key", *[F.col(f).alias(f"__leg_{f}") for f in fields]
-    )
+    leg_last = keyed_merge(leg_proj, lk, {}, seq_col=seq_col)
+    renamed = leg_last.select(lk, *[F.col(f).alias(lf[f]) for f in fields])
     if broadcast:
         renamed = F.broadcast(renamed)
 
-    joined = base.join(renamed, base[base_key] == renamed["__leg_key"], "left")
-    matched = F.col("__leg_key").isNotNull()
+    joined = base.join(renamed, base[base_key] == renamed[lk], "left")
+    matched = F.col(lk).isNotNull()
     out_cols: list[Column] = []
     for c in base.columns:
         if c in fields:
-            out_cols.append(F.when(matched, F.col(f"__leg_{c}")).otherwise(base[c]).alias(c))
+            out_cols.append(F.when(matched, F.col(lf[c])).otherwise(base[c]).alias(c))
         else:
             out_cols.append(base[c])
     for f in fields:
         if f not in base.columns:
-            out_cols.append(F.col(f"__leg_{f}").alias(f))
+            out_cols.append(F.col(lf[f]).alias(f))
     return joined.select(*out_cols)
-
-
-def keyed_merge_salted(
-    df: DataFrame,
-    key: str,
-    merge_rules: dict[str, str] | None = None,
-    seq_col: str = SEQ_COL,
-    salt_buckets: int = 16,
-    max_array_elements: int | None = None,
-) -> DataFrame:
-    """Skew-proof ``keyed_merge``: two-stage aggregation over a salt.
-
-    A hot key (one UPC = 10% of a 100 TB feed) funnels into a single
-    reducer under plain groupBy. Salting splits each key into
-    ``salt_buckets`` sub-groups — stage 1 combines within (key, salt)
-    in parallel, stage 2 merges the per-salt partials per key. Results are
-    IDENTICAL to keyed_merge (given unique ``_seq``):
-      * min/max     — associative, two-stage directly;
-      * last-write  — per-salt (value at max seq, max seq), final max_by
-                      over the per-salt seqs;
-      * addArray    — per-salt (seq, value) pairs, final flatten + sort.
-    AQE's skew-join splitting handles the JOIN side of skew; this handles
-    the AGGREGATION side, which AQE does not re-split.
-    """
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
-    if seq_col not in df.columns:
-        df = with_seq(df)
-        seq_col = SEQ_COL
-
-    kc = F.col(key)
-    df = df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-    df = df.withColumn("__salt", F.pmod(F.col(seq_col), F.lit(salt_buckets)))
-
-    value_cols = [c for c in df.columns if c not in (key, seq_col, "__salt")]
-    partial: list[Column] = []
-    final: list[Column] = []
-    for c in value_cols:
-        rule = merge_rules.get(c)
-        if rule == "min":
-            partial.append(F.min(c).alias(c))
-            final.append(F.min(c).alias(c))
-        elif rule == "max":
-            partial.append(F.max(c).alias(c))
-            final.append(F.max(c).alias(c))
-        elif rule == "sum":
-            partial.append(F.sum(c).alias(c))
-            final.append(F.sum(c).alias(c))
-        elif rule == "count":
-            partial.append(F.count(c).alias(c))
-            final.append(F.sum(c).alias(c))  # counts add up across salts
-        elif rule == "first":
-            partial.append(F.min_by(c, F.col(seq_col)).alias(c))
-            final.append(F.min_by(c, F.col("__min_seq")).alias(c))
-        elif rule == "addArray":
-            partial.append(
-                F.collect_list(
-                    F.struct(F.col(seq_col).alias("s"), F.col(c).alias("v"))
-                ).alias(c)
-            )
-            merged_pairs = F.array_sort(F.flatten(F.collect_list(c)))
-            if max_array_elements is not None:
-                merged_pairs = F.slice(merged_pairs, 1, int(max_array_elements))
-            final.append(F.transform(merged_pairs, lambda x: x["v"]).alias(c))
-        else:
-            partial.append(F.max_by(c, F.col(seq_col)).alias(c))
-            final.append(F.max_by(c, F.col("__max_seq")).alias(c))
-    partial.append(F.max(seq_col).alias("__max_seq"))
-    partial.append(F.min(seq_col).alias("__min_seq"))
-
-    staged = df.groupBy(key, "__salt").agg(*partial)
-    return staged.groupBy(key).agg(*final)
 
 
 def keyed_merge_auto(
@@ -306,64 +284,36 @@ def keyed_merge_auto(
     decision, and pin `merge_strategy` for reruns — the decision dict
     (strategy, max_key_rows, salt_above, salt_buckets, probed) is
     returned for exactly that, the opq_train_auto convention."""
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    merge_rules = _validated(merge_rules)
     decision: dict = {"salt_above": int(salt_above), "probed": False,
-                      "max_key_rows": None}
+                      "max_key_rows": None, "strategy": "plain"}
+    n = 1
     if "addArray" not in merge_rules.values():
-        decision["strategy"] = "plain"
         decision["reason"] = (
             "no addArray rule: per-key aggregation state is constant "
             "(map-side partials), plain groupBy is skew-safe"
         )
-        return (
-            keyed_merge(
-                df, key, merge_rules, seq_col=seq_col,
-                max_array_elements=max_array_elements,
-            ),
-            decision,
+    else:
+        hot = int(
+            _keyed_rows(df, key).groupBy(key).count()
+            .agg(F.max("count").alias("m"))
+            .first()["m"] or 0
         )
-    kc = F.col(key)
-    hot = (
-        df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-        .groupBy(key).count()
-        .agg(F.max("count").alias("m"))
-        .first()["m"]
-    )
-    decision["probed"] = True
-    decision["max_key_rows"] = int(hot or 0)
-    if decision["max_key_rows"] >= salt_above:
-        if salt_buckets == "auto":
-            salt_buckets = min(
-                256, max(2, -(-decision["max_key_rows"] // salt_above))
+        decision.update(probed=True, max_key_rows=hot)
+        if hot >= salt_above:
+            n = (min(256, max(2, -(-hot // salt_above)))
+                 if salt_buckets == "auto" else int(salt_buckets))
+            decision.update(
+                strategy="salted", salt_buckets=n,
+                reason=(f"hottest key carries {hot} rows >= salt_above="
+                        f"{salt_above}: addArray collect state on one "
+                        "reducer would be the straggler/OOM term"),
             )
-        decision["strategy"] = "salted"
-        decision["salt_buckets"] = int(salt_buckets)
-        decision["reason"] = (
-            f"hottest key carries {decision['max_key_rows']} rows "
-            f">= salt_above={salt_above}: addArray collect state on one "
-            "reducer would be the straggler/OOM term"
-        )
-        return (
-            keyed_merge_salted(
-                df, key, merge_rules, seq_col=seq_col,
-                salt_buckets=int(salt_buckets),
-                max_array_elements=max_array_elements,
-            ),
-            decision,
-        )
-    decision["strategy"] = "plain"
-    decision["reason"] = (
-        f"hottest key carries {decision['max_key_rows']} rows < "
-        f"salt_above={salt_above}: one-stage merge is cheaper (no "
-        "second shuffle)"
-    )
-    return (
-        keyed_merge(
-            df, key, merge_rules, seq_col=seq_col,
-            max_array_elements=max_array_elements,
-        ),
-        decision,
-    )
+        else:
+            decision["reason"] = (
+                f"hottest key carries {hot} rows < salt_above={salt_above}: "
+                "one-stage merge is cheaper (no second shuffle)"
+            )
+    out = keyed_merge(df, key, merge_rules, seq_col=seq_col,
+                      max_array_elements=max_array_elements, salt_buckets=n)
+    return out, decision

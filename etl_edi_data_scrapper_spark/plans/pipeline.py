@@ -25,6 +25,7 @@ from etl_edi_data_scrapper_spark.operators.merge import (
     SEQ_COL,
     enrich,
     keyed_merge,
+    keyed_merge_auto,
     with_seq,
 )
 from etl_edi_data_scrapper_spark.plans.config import InputConfig
@@ -91,36 +92,31 @@ def aggregate(
     # byte-identical results either way). "salt_above"/"salt_buckets"
     # tune the auto/salted paths.
     strategy = cfg.extra.get("merge_strategy", "plain")
-    if strategy == "salted":
-        from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
-        return keyed_merge_salted(
-            mapped, cfg.unique_index, merge_rules,
-            salt_buckets=int(cfg.extra.get("salt_buckets", 16)),
-        )
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_auto
-
-        sb = cfg.extra.get("salt_buckets", "auto")
-        out, dec = keyed_merge_auto(
-            mapped, cfg.unique_index, merge_rules,
-            salt_buckets=sb if sb == "auto" else int(sb),
-            salt_above=int(cfg.extra.get("salt_above", 1_000_000)),
-        )
-        print(
-            f"STAGE: merge_strategy auto: {dec['strategy']} "
-            f"(max_key_rows={dec['max_key_rows']}, "
-            f"salt_above={dec['salt_above']}"
-            + (f", salt_buckets={dec['salt_buckets']}"
-               if "salt_buckets" in dec else "")
-            + ")"
-        )
-        return out
-    if strategy != "plain":
+    if strategy not in ("plain", "salted", "auto"):
         raise ValueError(
             f"unknown merge_strategy {strategy!r} (plain|salted|auto)"
         )
-    return keyed_merge(mapped, cfg.unique_index, merge_rules)
+    if strategy != "auto":
+        return keyed_merge(
+            mapped, cfg.unique_index, merge_rules,
+            salt_buckets=(int(cfg.extra.get("salt_buckets", 16))
+                          if strategy == "salted" else 1),
+        )
+    sb = cfg.extra.get("salt_buckets", "auto")
+    out, dec = keyed_merge_auto(
+        mapped, cfg.unique_index, merge_rules,
+        salt_buckets=sb if sb == "auto" else int(sb),
+        salt_above=int(cfg.extra.get("salt_above", 1_000_000)),
+    )
+    print(
+        f"STAGE: merge_strategy auto: {dec['strategy']} "
+        f"(max_key_rows={dec['max_key_rows']}, "
+        f"salt_above={dec['salt_above']}"
+        + (f", salt_buckets={dec['salt_buckets']}"
+           if "salt_buckets" in dec else "")
+        + ")"
+    )
+    return out
 
 
 def _read(

@@ -422,8 +422,3 @@ def read_excel(spark: SparkSession, source: str, range_: str | None = None) -> D
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
     return out
-
-
-def pad_and_trim_header_rows(df: DataFrame) -> DataFrame:
-    """Sheets/Excel cell hygiene: trim strings (header trimmed at read)."""
-    return df.select(*[F.trim(F.col(c)).alias(c.strip()) for c in df.columns])

@@ -17,8 +17,6 @@ from etl_edi_data_scrapper_spark.sources.biff import _fmt_num
 
 _GNM = "{http://www.gnumeric.org/v10.dtd}"
 
-GZIP_MAGIC = b"\x1f\x8b"
-
 
 def read_gnumeric_grid(path: str, sheet_name: str | None = None) -> dict[int, dict[int, str]]:
     """.gnumeric file → {row: {col: text}} for one sheet (named, else first)."""

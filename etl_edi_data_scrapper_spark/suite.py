@@ -3302,8 +3302,6 @@ def q_keyed_merge_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew-proof two-stage merge through the oracle gate: byte-identical
     results to `keyed_merge` (same oracle SQL) via (key, salt) partial
     aggregation — proof the hot-key path preserves exact semantics."""
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
     feed = _dirty_feed(spark, sf_dir).withColumnRenamed("seq", SEQ_COL)
     mapped, merge_rules = map_columns(
         feed,
@@ -3318,7 +3316,7 @@ def q_keyed_merge_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         version=1,
         keep=[SEQ_COL],
     )
-    merged = keyed_merge_salted(mapped, "upc", merge_rules, salt_buckets=8)
+    merged = keyed_merge(mapped, "upc", merge_rules, salt_buckets=8)
     return merged.withColumn("status", F.array_join("status", "|"))
 
 

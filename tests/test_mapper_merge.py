@@ -94,6 +94,15 @@ def test_enrich_overwrites_and_keeps(spark):
     assert rows["77"].extra is None
     assert "99" not in rows                   # leg-only keys discarded
 
+    # user columns named like the join helpers are kept, not clobbered
+    clash = base.select(
+        "*", F.lit("b").alias("__leg_key"), F.lit("c").alias("__leg_name")
+    )
+    rows = {r.upc: r for r in enrich(clash, leg, "upc", "sku", ["name", "extra"]).collect()}
+    assert rows["42"].name == "new_name" and rows["42"].extra == "extra42"
+    assert rows["77"].name == "keep_me" and rows["77"].extra is None
+    assert {(r["__leg_key"], r["__leg_name"]) for r in rows.values()} == {("b", "c")}
+
 
 def test_enrich_leg_last_occurrence_wins(spark):
     base = spark.createDataFrame([("42", 1)], "upc string, _seq long")
@@ -131,15 +140,13 @@ def test_enrich_null_leg_value_overwrites_on_match(spark):
 
 
 def test_keyed_merge_max_array_elements(spark):
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
     df = spark.createDataFrame(
         [(i, "k", f"v{i}") for i in range(1, 8)],
         "_seq long, key string, status string",
     )
     out = keyed_merge(df, "key", {"status": "addArray"}, max_array_elements=3).first()
     assert out.status == ["v1", "v2", "v3"]  # FIRST N in arrival order
-    salted = keyed_merge_salted(
+    salted = keyed_merge(
         df, "key", {"status": "addArray"}, salt_buckets=3, max_array_elements=3
     ).first()
     assert salted.status == ["v1", "v2", "v3"]
@@ -149,8 +156,6 @@ def test_salted_merge_equals_plain(spark, sf_dir):
     """keyed_merge_salted must produce byte-identical results to keyed_merge
     on the flagship feed shape (all four rule kinds + LWW)."""
     from pyspark.sql import functions as F
-
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         F.expr("l_orderkey * 8 + l_linenumber").alias("_seq"),
@@ -162,7 +167,7 @@ def test_salted_merge_equals_plain(spark, sf_dir):
     )
     rules = {"qty": "min", "price": "max", "status": "addArray"}
     plain = {r.upc: r for r in keyed_merge(li, "upc", rules).collect()}
-    salted = {r.upc: r for r in keyed_merge_salted(li, "upc", rules, salt_buckets=7).collect()}
+    salted = {r.upc: r for r in keyed_merge(li, "upc", rules, salt_buckets=7).collect()}
     assert plain.keys() == salted.keys()
     for k in plain:
         assert tuple(plain[k]) == tuple(salted[k]), k
@@ -170,8 +175,6 @@ def test_salted_merge_equals_plain(spark, sf_dir):
 
 def test_extended_rules_sum_first_count(spark):
     """sum/first/count generalizations: plain and salted agree, values exact."""
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
     rows = [
         # (_seq, key, v, w)
         (1, "a", 10, "x"),
@@ -185,7 +188,7 @@ def test_extended_rules_sum_first_count(spark):
     assert plain == {"a": (35, 2), "b": (7, 1)}  # count skips nulls
     salted = {
         r.k: (r.v, r.w)
-        for r in keyed_merge_salted(df, "k", rules, salt_buckets=3).collect()
+        for r in keyed_merge(df, "k", rules, salt_buckets=3).collect()
     }
     assert salted == plain
 
@@ -193,17 +196,15 @@ def test_extended_rules_sum_first_count(spark):
     assert first == {"a": 10, "b": 7}
     first_s = {
         r.k: r.v
-        for r in keyed_merge_salted(df, "k", {"v": "first"}, salt_buckets=3).collect()
+        for r in keyed_merge(df, "k", {"v": "first"}, salt_buckets=3).collect()
     }
     assert first_s == first
 
 
 def test_salted_merge_hot_key(spark):
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
     rows = [(i, "hot" if i % 10 else "cold", f"v{i}") for i in range(1000)]
     df = spark.createDataFrame(rows, "_seq long, key string, val string")
-    out = {r.key: r.val for r in keyed_merge_salted(df, "key", {}).collect()}
+    out = {r.key: r.val for r in keyed_merge(df, "key", {}, salt_buckets=16).collect()}
     assert out["hot"] == "v999"   # last-write-wins across salts
     assert out["cold"] == "v990"
 
@@ -214,8 +215,6 @@ def test_salted_merge_equals_plain_property(spark):
     One generated corpus, several salt factors — a cheap exhaustive sweep
     beats per-example Spark jobs under hypothesis."""
     import random
-
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
 
     rng = random.Random(20260813)
     keys = ["", None] + [f"k{i}" for i in range(17)]
@@ -238,9 +237,35 @@ def test_salted_merge_equals_plain_property(spark):
     for buckets in (1, 3, 16):
         salted = {
             r.key: tuple(r)
-            for r in keyed_merge_salted(df, "key", rules, salt_buckets=buckets).collect()
+            for r in keyed_merge(df, "key", rules, salt_buckets=buckets).collect()
         }
         assert salted == plain, f"salt_buckets={buckets}"
+
+    # user columns named like the salted plan's helpers survive both plans
+    clash = df.select(
+        "*", F.col("qty").alias("__salt"), F.col("price").alias("__max_seq"),
+        F.col("lww").alias("__min_seq"),
+    )
+    plain = {r.key: tuple(r) for r in keyed_merge(clash, "key", rules).collect()}
+    assert {"__salt", "__max_seq", "__min_seq"} <= set(
+        keyed_merge(clash, "key", rules).columns
+    )
+    for buckets in (3, 16):
+        salted = keyed_merge(clash, "key", rules, salt_buckets=buckets)
+        assert {r.key: tuple(r) for r in salted.collect()} == plain, buckets
+
+
+@pytest.mark.parametrize("salt_buckets,shuffles", [(1, 1), (4, 2)])
+def test_keyed_merge_plan_shape(spark, salt_buckets, shuffles):
+    """Plain is one shuffle, salted two; either way the addArray finish
+    projection folds into the final Aggregate (no Project above it)."""
+    df = spark.createDataFrame(
+        [(1, "k", 3, "a", "x")], "_seq long, key string, q long, st string, w string"
+    )
+    out = keyed_merge(df, "key", {"q": "min", "st": "addArray"}, salt_buckets=salt_buckets)
+    qe = out._jdf.queryExecution()
+    assert qe.executedPlan().toString().count("Exchange hashpartitioning") == shuffles
+    assert qe.optimizedPlan().nodeName() == "Aggregate"
 
 
 def test_keyed_merge_auto_decision_and_equivalence(spark):
@@ -248,10 +273,7 @@ def test_keyed_merge_auto_decision_and_equivalence(spark):
     probe (constant-state partials are already skew-safe); addArray +
     measured hot key ≥ salt_above → salted; below → plain. Results are
     identical to the direct calls in every branch."""
-    from etl_edi_data_scrapper_spark.operators.merge import (
-        keyed_merge_auto,
-        keyed_merge_salted,
-    )
+    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_auto
 
     rows = [(i, "hot" if i % 10 else f"cold{i}", f"v{i}", i % 7)
             for i in range(300)]
@@ -272,7 +294,7 @@ def test_keyed_merge_auto_decision_and_equivalence(spark):
     assert dec["max_key_rows"] == 270
     salted = {
         r.key: tuple(r)
-        for r in keyed_merge_salted(df, "key", rules, salt_buckets=5).collect()
+        for r in keyed_merge(df, "key", rules, salt_buckets=5).collect()
     }
     assert {r.key: tuple(r) for r in out.collect()} == salted
 
@@ -282,7 +304,7 @@ def test_keyed_merge_auto_decision_and_equivalence(spark):
     assert dec["strategy"] == "salted" and dec["salt_buckets"] == 3
     salted3 = {
         r.key: tuple(r)
-        for r in keyed_merge_salted(df, "key", rules, salt_buckets=3).collect()
+        for r in keyed_merge(df, "key", rules, salt_buckets=3).collect()
     }
     assert {r.key: tuple(r) for r in out.collect()} == salted3
 
